@@ -1,11 +1,10 @@
-from .checks import CheckResult, DQReport, assert_single_value, run_checks
+from .checks import CheckResult, DQReport, run_checks
 from .expectations import ExpectationSuite, load_expectations_yaml, parse_expectations
 
 __all__ = [
     "CheckResult",
     "DQReport",
     "ExpectationSuite",
-    "assert_single_value",
     "load_expectations_yaml",
     "parse_expectations",
     "run_checks",

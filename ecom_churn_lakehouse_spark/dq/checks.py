@@ -11,16 +11,18 @@ optionally quarantines bounded failed-row samples.
 
 Scale design: all checks over one input are evaluated in ONE pass —
 a single aggregation of conditional counts — instead of the
-reference's one-job-per-check recomputation (SURVEY §3.2 defect).
-Failed-row sampling is bounded (``limit``) so quarantine never becomes
-a second full scan's worth of output.
+reference's one-job-per-check recomputation (SURVEY §3.2 defect). The
+aggregates are plain (no DISTINCT), so the same pass can ride a
+publish write as a ``df.observe`` (``ManagedTable.merge(checks=...)``)
+and cost no job of its own. Failed-row sampling is bounded (``limit``)
+so quarantine never becomes a second full scan's worth of output.
 """
 
 from __future__ import annotations
 
 import json
 from dataclasses import dataclass, field
-from typing import Any
+from typing import Any, Callable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -28,8 +30,8 @@ from pyspark.sql import functions as F
 __all__ = [
     "compile_check",
     "run_checks",
-    "observe_checks",
-    "report_from_observation",
+    "check_aggregates",
+    "report_from_metrics",
     "CheckResult",
     "DQReport",
 ]
@@ -49,8 +51,9 @@ def compile_check(spec: dict[str, Any]) -> Column:
     - ``expr``: arbitrary SQL predicate string selecting bad rows (P8
       generalization)
 
-    ``unique`` (D2) is group-based, handled separately in
-    :func:`run_checks`.
+    ``unique`` (D2) is group-based and ``single_value`` (A8) a
+    whole-frame property; :func:`check_aggregates` and
+    :func:`report_from_metrics` handle both.
     """
     t = spec["type"]
     if t == "not_null":
@@ -80,6 +83,8 @@ def compile_check(spec: dict[str, Any]) -> Column:
     raise ValueError(f"unknown check type {t!r}")
 
 
+
+
 @dataclass
 class CheckResult:
     name: str
@@ -87,6 +92,8 @@ class CheckResult:
     severity: str
     bad_rows: int
     passed: bool
+    #: the column's one value, for a passing ``single_value`` check
+    value: Any = None
 
 
 @dataclass
@@ -106,7 +113,10 @@ class DQReport:
         return {
             "row_count": self.row_count,
             "ok": self.ok,
-            "checks": [vars(r) for r in self.results],
+            "checks": [
+                {k: v for k, v in vars(r).items() if k != "value" or v is not None}
+                for r in self.results
+            ],
         }
 
     def write_json(self, path: str) -> None:
@@ -114,63 +124,78 @@ class DQReport:
             json.dump(self.to_dict(), f, indent=2)
 
 
-def assert_single_value(df: DataFrame, column: str) -> Any:
-    """A8 single-distinct-value assertion (version homogeneity gate,
-    build_training_snapshot.py:32-38 / train_stub.py:44-50): the column
-    must hold exactly one distinct value across the frame; returns it.
-    Bounded driver work: collects at most 2 rows."""
-    vals = [r[0] for r in df.select(column).distinct().limit(2).collect()]
-    if len(vals) != 1:
-        raise ValueError(
-            f"column {column!r} must be homogeneous; found "
-            + ("no rows" if not vals else f"multiple values (e.g. {vals})")
-        )
-    return vals[0]
+def check_aggregates(
+    checks: list[dict[str, Any]], where: Column | None = None
+) -> list[Column]:
+    """The aggregates every non-``unique`` check in ``checks`` needs,
+    over the rows where ``where`` holds (all rows by default).
 
-
-def observe_checks(df: DataFrame, checks: list[dict[str, Any]]):
-    """Attach row-predicate checks as an ``Observation`` — ZERO extra scans.
-
-    :func:`run_checks` costs one dedicated aggregation job per table;
-    at 100 TB that is a full extra scan before every publish. This
-    variant rides the metrics on whatever action consumes the returned
-    DataFrame (e.g. the publish write itself): Spark's observe API
-    accumulates the conditional counts on the executors as rows stream
-    through, for free.
-
-    Returns ``(observed_df, observation)``; feed the observation to
-    :func:`report_from_observation` AFTER the action has run. Only
-    row-predicate checks are supported (``unique`` is group-based and
-    still needs its own pass — or an approx_count_distinct screen).
+    The columns are plain aggregates (no DISTINCT), so they serve both
+    a ``df.agg`` pass (:func:`run_checks`) and a ``df.observe`` riding
+    a write (``ManagedTable.merge(checks=...)``): ``__n`` counts the
+    rows, ``__c{i}`` the violations of row-predicate check ``i``, and a
+    ``single_value`` check ``i`` (A8 version homogeneity,
+    build_training_snapshot.py:32-38) gets ``__lo{i}``/``__hi{i}``/
+    ``__nn{i}``: min, max and non-null count of its column. ``unique``
+    checks are group-based and get no column here. Unknown check types
+    raise before any Spark work.
     """
-    from pyspark.sql import Observation
-
-    row_checks = [c for c in checks if c["type"] != "unique"]
-    if len(row_checks) != len(checks):
-        raise ValueError("observe_checks supports row-predicate checks only")
-    obs = Observation()
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for i, spec in enumerate(row_checks):
-        bad = compile_check(spec)
-        aggs.append(
-            F.coalesce(F.sum(F.when(bad, 1).otherwise(0)), F.lit(0)).alias(f"__c{i}")
-        )
-    return df.observe(obs, *aggs), obs
-
-
-def report_from_observation(obs, checks: list[dict[str, Any]]) -> DQReport:
-    """Build a :class:`DQReport` from a completed observation."""
-    got = obs.get
-    report = DQReport(row_count=int(got["__n"]))
+    rows = F.lit(True) if where is None else where
+    aggs = [F.count_if(rows).alias("__n")]
     for i, spec in enumerate(checks):
-        bad_rows = int(got[f"__c{i}"])
+        if spec["type"] == "unique":
+            continue
+        if spec["type"] == "single_value":
+            v = F.when(rows, F.col(spec["column"]))
+            aggs += [
+                F.min(v).alias(f"__lo{i}"),
+                F.max(v).alias(f"__hi{i}"),
+                F.count(v).alias(f"__nn{i}"),
+            ]
+        else:
+            aggs.append(F.count_if(rows & compile_check(spec)).alias(f"__c{i}"))
+    return aggs
+
+
+def report_from_metrics(
+    metrics: dict[str, Any],
+    checks: list[dict[str, Any]],
+    dup_groups: Callable[[dict[str, Any]], int],
+) -> DQReport:
+    """Build a :class:`DQReport`, in ``checks`` order, from the values
+    of :func:`check_aggregates`; ``dup_groups(spec)`` gives a ``unique``
+    check's duplicated key groups (its ``bad_rows``).
+
+    A ``single_value`` check passes when the frame has rows, none NULL,
+    and min == max; its ``bad_rows`` are the NULL rows plus, when the
+    values disagree, every non-NULL row.
+    """
+    n = int(metrics["__n"])
+    report = DQReport(row_count=n)
+    for i, spec in enumerate(checks):
+        t, value = spec["type"], None
+        if t == "unique":
+            name = spec.get("name", "unique_" + "_".join(spec["keys"]))
+            bad = int(dup_groups(spec))
+            passed = bad == 0
+        elif t == "single_value":
+            name = spec.get("name", f"single_value_{spec['column']}")
+            lo, hi, nn = metrics[f"__lo{i}"], metrics[f"__hi{i}"], int(metrics[f"__nn{i}"])
+            bad = (n - nn) + (nn if lo != hi else 0)
+            passed = n > 0 and bad == 0
+            value = lo if passed else None
+        else:
+            name = spec.get("name", f"{t}_{i}")
+            bad = int(metrics[f"__c{i}"])
+            passed = bad == 0
         report.results.append(
             CheckResult(
-                name=spec.get("name", f"{spec['type']}_{i}"),
-                check_type=spec["type"],
+                name=name,
+                check_type=t,
                 severity=spec.get("severity", "critical"),
-                bad_rows=bad_rows,
-                passed=bad_rows == 0,
+                bad_rows=bad,
+                passed=passed,
+                value=value,
             )
         )
     return report
@@ -182,64 +207,40 @@ def run_checks(
     quarantine_dir: str | None = None,
     sample_rows: int = 100,
 ) -> DQReport:
-    """Evaluate all checks; return a report with severity gating applied.
+    """Evaluate all checks in a pass of their own; return the report.
 
-    Row-predicate checks are fused into ONE aggregation job
-    (conditional sums), unlike the reference's per-check jobs. Unique
-    checks each need a groupBy. Quarantine (D8) writes at most
-    ``sample_rows`` violating rows per failed check as parquet.
+    Row-predicate and ``single_value`` checks are fused into ONE
+    aggregation job (:func:`check_aggregates`), unlike the reference's
+    per-check jobs. Unique checks each need a groupBy. Quarantine (D8)
+    writes at most ``sample_rows`` violating rows per failed row or
+    unique check as parquet. Publishing stages gate through
+    ``ManagedTable.merge(checks=...)`` instead, which takes the same
+    counts from the publish write; this pass serves ad-hoc audits and
+    failure-path quarantine samples.
     """
-    row_checks = [c for c in checks if c["type"] != "unique"]
-    unique_checks = [c for c in checks if c["type"] == "unique"]
-
-    agg_cols = [F.count("*").alias("__n")]
-    predicates: list[Column] = []
-    for i, spec in enumerate(row_checks):
-        bad = compile_check(spec)
-        predicates.append(bad)
-        # coalesce: SUM over an empty frame is NULL, not 0
-        agg_cols.append(
-            F.coalesce(F.sum(F.when(bad, 1).otherwise(0)), F.lit(0)).alias(f"__c{i}")
-        )
-    counts = df.agg(*agg_cols).collect()[0]
-
-    report = DQReport(row_count=int(counts["__n"]))
-    for i, spec in enumerate(row_checks):
-        bad_rows = int(counts[f"__c{i}"])
-        report.results.append(
-            CheckResult(
-                name=spec.get("name", f"{spec['type']}_{i}"),
-                check_type=spec["type"],
-                severity=spec.get("severity", "critical"),
-                bad_rows=bad_rows,
-                passed=bad_rows == 0,
+    counts = df.agg(*check_aggregates(checks)).collect()[0].asDict()
+    dup_frames = {
+        id(spec): df.groupBy(*spec["keys"]).count().filter(F.col("count") > 1)
+        for spec in checks
+        if spec["type"] == "unique"
+    }
+    report = report_from_metrics(
+        counts, checks, lambda spec: dup_frames[id(spec)].count()
+    )
+    if quarantine_dir:
+        for spec, result in zip(checks, report.results):
+            if not result.bad_rows or spec["type"] == "single_value":
+                continue
+            if spec["type"] == "unique":
+                # Failed-row extraction via semi-join back to the
+                # duplicate key set (J5, dq.py:31-35).
+                keys = spec["keys"]
+                bad = df.join(
+                    dup_frames[id(spec)].select(*keys), on=keys, how="left_semi"
+                )
+            else:
+                bad = df.filter(compile_check(spec))
+            bad.limit(sample_rows).write.mode("overwrite").parquet(
+                f"{quarantine_dir}/{result.name}"
             )
-        )
-        if bad_rows and quarantine_dir:
-            df.filter(predicates[i]).limit(sample_rows).write.mode(
-                "overwrite"
-            ).parquet(f"{quarantine_dir}/{report.results[-1].name}")
-
-    for spec in unique_checks:
-        keys = spec["keys"]
-        dup_groups = df.groupBy(*keys).count().filter(F.col("count") > 1)
-        n_dup_groups = dup_groups.count()
-        report.results.append(
-            CheckResult(
-                name=spec.get("name", "unique_" + "_".join(keys)),
-                check_type="unique",
-                severity=spec.get("severity", "critical"),
-                bad_rows=n_dup_groups,
-                passed=n_dup_groups == 0,
-            )
-        )
-        if n_dup_groups and quarantine_dir:
-            # Failed-row extraction via semi-join back to the duplicate
-            # key set (J5, dq.py:31-35).
-            df.join(
-                dup_groups.select(*keys), on=keys, how="left_semi"
-            ).limit(sample_rows).write.mode("overwrite").parquet(
-                f"{quarantine_dir}/{report.results[-1].name}"
-            )
-
     return report

@@ -8,7 +8,7 @@ The reference's blocking DQ gate is driven by YAML expectation files
 check types from JSON contracts (``pipelines/medallion.py``); this
 module accepts the YAML format too, normalizing it onto the engine's
 spec dicts so :func:`dq.checks.run_checks` /
-:func:`dq.checks.observe_checks` run either config unchanged.
+``ManagedTable.merge(checks=...)`` run either config unchanged.
 
 Normalization:
 - ``not_null``  → engine ``not_null`` (``columns`` list, as-is)

@@ -11,8 +11,9 @@ Scale posture: the history table grows by a handful of rows per
 pipeline run (one per check), so every frame here is tiny — the
 trailing-window stats are one aggregation over a key whose cardinality
 is (checks × retained runs). The expensive part (measuring the
-metrics) already rode the publish write via observe_checks; recording
-and drift detection add no scan of the data plane.
+metrics) already rode the publish write via
+``ManagedTable.merge(checks=...)``; recording and drift detection add
+no scan of the data plane.
 """
 
 from __future__ import annotations

@@ -47,12 +47,6 @@ def main(argv: list[str] | None = None) -> int:
     g.add_argument("--gold", required=True)
     g.add_argument("--as-of", required=True)
     g.add_argument("--run-id", required=True)
-    g.add_argument(
-        "--observed-gates",
-        action="store_true",
-        help="ride DQ gate metrics on the publish write (merge_gated) "
-        "instead of a separate pre-publish check pass",
-    )
 
     gi = sub.add_parser("gold-incremental")
     gi.add_argument("--silver", required=True)
@@ -104,12 +98,7 @@ def main(argv: list[str] | None = None) -> int:
         )
     elif args.cmd == "gold":
         r = pipelines.gold_features(
-            spark,
-            args.silver,
-            args.gold,
-            args.as_of,
-            args.run_id,
-            observed_gates=args.observed_gates,
+            spark, args.silver, args.gold, args.as_of, args.run_id
         )
     elif args.cmd == "gold-incremental":
         from ecom_churn_lakehouse_spark.pipelines.incremental import (

@@ -25,9 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.storagelevel import StorageLevel
 
-from ecom_churn_lakehouse_spark.dq.checks import run_checks
 from ecom_churn_lakehouse_spark.pipelines.medallion import (
     _GOLD_GATES,
     DQGateFailure,
@@ -36,7 +34,7 @@ from ecom_churn_lakehouse_spark.pipelines.medallion import (
     _write_stage_metadata,
 )
 from ecom_churn_lakehouse_spark.plans.churn import customer_features
-from ecom_churn_lakehouse_spark.sources.managed_table import ManagedTable
+from ecom_churn_lakehouse_spark.sources.managed_table import ManagedTable, MergeBlocked
 from ecom_churn_lakehouse_spark.versioning import canonical_hash
 from ecom_churn_lakehouse_spark.logging_util import log_event
 
@@ -58,8 +56,16 @@ def incremental_gold_update(
     distinct keys of the latest silver MERGE source (the CDC delta).
     Result rows are bit-identical to a full ``gold_features`` run for
     those customers (asserted in tests/test_incremental.py), because
-    the feature plan is per-customer decomposable.
+    the feature plan is per-customer decomposable. The recompute, the
+    gates and the publish are one write; row, tombstone and gate counts
+    come from its commit.
     """
+    gold = ManagedTable(spark, gold_path, keys=["customer_id", "as_of_date"])
+    if not gold.exists():
+        raise ValueError(
+            "incremental update requires an existing gold table; run the "
+            "full gold_features publish first"
+        )
     silver = ManagedTable(spark, silver_path, keys=["order_id"]).read()
     keys = changed_keys.select("customer_id").distinct()
     scoped = silver.join(keys, on="customer_id", how="left_semi")
@@ -71,48 +77,38 @@ def incremental_gold_update(
     )
     fv = feature_version or _contract("gold_customer_features").contract_hash
     snapshot_id = canonical_hash({"as_of": as_of_date, "fv": fv})
-    feats = (
-        customer_features(orders, as_of_date)
-        .withColumn("as_of_date", F.to_date(F.lit(as_of_date)))
-        .withColumn("_snapshot_id", F.lit(snapshot_id))
-        .withColumn("_feature_version", F.lit(fv))
-        .withColumn("_gold_run_id", F.lit(run_id))
-        .withColumn("_gold_ts", F.current_timestamp())
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    # Same blocking gates as the full run, evaluated over the delta
-    # slice only (the untouched remainder already passed its gates).
-    report = run_checks(feats, _GOLD_GATES)
-    if not report.ok:
-        feats.unpersist()
-        raise DQGateFailure(
-            f"incremental gold gates failed: "
-            f"{[r.name for r in report.blocking_failures]}"
-        )
-    n = feats.count()
-    gold = ManagedTable(spark, gold_path, keys=["customer_id", "as_of_date"])
-    if not gold.exists():
-        raise ValueError(
-            "incremental update requires an existing gold table; run the "
-            "full gold_features publish first"
-        )
+    feats = customer_features(orders, as_of_date)
     # Changed keys with NO surviving orders (full CDC erasure) produce
     # no feature row — without a tombstone their stale gold row would
-    # outlive the data that justified it. merge(delete_col=...) removes
-    # them in the same pass that upserts the recomputed rows.
-    vanished = keys.join(
-        feats.select("customer_id"), on="customer_id", how="left_anti"
-    ).withColumn("as_of_date", F.to_date(F.lit(as_of_date)))
-    for field in feats.schema.fields:
-        if field.name not in vanished.columns:
-            vanished = vanished.withColumn(
-                field.name, F.lit(None).cast(field.dataType)
-            )
-    n_deleted = vanished.count()
-    source = feats.withColumn("_deleted", F.lit(False)).unionByName(
-        vanished.select(*feats.columns).withColumn("_deleted", F.lit(True))
+    # outlive the data that justified it. Every changed key therefore
+    # gets one source row: its recomputed features, or a tombstone
+    # where the left join finds none, and merge(delete_col=...) removes
+    # those in the same pass that upserts the recomputed rows.
+    found = feats.withColumn("_found", F.lit(True))
+    source = (
+        keys.join(found, on="customer_id", how="left")
+        .select(
+            *feats.columns,
+            F.to_date(F.lit(as_of_date)).alias("as_of_date"),
+            F.lit(snapshot_id).alias("_snapshot_id"),
+            F.lit(fv).alias("_feature_version"),
+            F.lit(run_id).alias("_gold_run_id"),
+            F.current_timestamp().alias("_gold_ts"),
+            F.col("_found").isNull().alias("_deleted"),
+        )
     )
-    gold.merge(source, delete_col="_deleted")
+    # Same blocking gates as the full run, evaluated over the upserted
+    # delta slice only (the untouched remainder already passed them).
+    try:
+        commit = gold.merge(source, delete_col="_deleted", checks=_GOLD_GATES)
+    except MergeBlocked as exc:
+        raise DQGateFailure(
+            f"incremental gold gates failed: "
+            f"{[r.name for r in exc.report.blocking_failures]}"
+        ) from exc
+    report = commit.report
+    n = report.row_count
+    n_deleted = commit.metrics["numSourceRows"] - n
     log_event(
         "gold_incremental_published",
         run_id,
@@ -134,5 +130,4 @@ def incremental_gold_update(
             "gates": report.to_dict(),
         },
     )
-    feats.unpersist()
     return StageResult(rows_published=n, metadata=report.to_dict())

@@ -12,8 +12,16 @@ reference's stage semantics end-to-end (SURVEY.md §3):
 - labels / training snapshot / latest-features export
   (``labels.py``, ``build_training_snapshot.py``, ``build_latest_features.py``)
 
-Fixes the reference's recompute defect (§3.2): multi-action lineages
-are persisted once instead of re-derived per action.
+Fixes the reference's recompute defect (§3.2) by giving each stage one
+action: the stage's publish is a single ``ManagedTable`` write, and the
+stage takes its row counts and gate reports from that write's
+:class:`~ecom_churn_lakehouse_spark.sources.managed_table.Commit`
+(``df.observe`` counts), not from ``count()`` or a separate check pass.
+A frame is persisted only if it is read more than once and carries no
+shuffle partitioning (silver's normalized bronze, read by the publish
+and by the preclean quarantine): caching a shuffled frame pins its
+shuffle partitions, so AQE can no longer coalesce them and every later
+stage and snapshot inherits dozens of tiny tasks and files.
 
 Input shape is the reference's raw orders contract: string columns
 ``order_id, customer_id, order_status, order_purchase_timestamp``
@@ -26,19 +34,19 @@ import datetime as dt
 import os
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark import StorageLevel
 
 from ecom_churn_lakehouse_spark.contracts import Contract
-from ecom_churn_lakehouse_spark.dq import assert_single_value, run_checks
+from ecom_churn_lakehouse_spark.dq import run_checks
 from ecom_churn_lakehouse_spark.logging_util import log_event
 from ecom_churn_lakehouse_spark.operators.windows import dedup_top1
 from ecom_churn_lakehouse_spark.plans.churn import (
     churn_labels,
     customer_features,
 )
-from ecom_churn_lakehouse_spark.sources.managed_table import ManagedTable
+from ecom_churn_lakehouse_spark.sources.managed_table import ManagedTable, MergeBlocked
 from ecom_churn_lakehouse_spark.versioning import canonical_hash, file_fingerprint
 
 __all__ = [
@@ -138,7 +146,6 @@ def bronze_ingest(
             log_event("bronze_skipped_already_ingested", run_id, fingerprint=fingerprint)
             return StageResult(rows_published=0, skipped=True)
 
-    row_count = raw.count()
     stamped = (
         raw.withColumn("_ingest_run_id", F.lit(run_id))
         .withColumn("_ingest_ts", F.current_timestamp())
@@ -148,7 +155,8 @@ def bronze_ingest(
         .withColumn("_schema_version", F.lit(contract.contract_hash))
     )
     bronze = ManagedTable(spark, bronze_path, keys=["order_id"])
-    bronze.append(stamped, partition_by=["ingest_date"])
+    commit = bronze.append(stamped, partition_by=["ingest_date"])
+    row_count = commit.metrics["numSourceRows"]
     _audit_record(spark, audit, run_id, fingerprint, "success", row_count)
     log_event("bronze_ingested", run_id, rows=row_count, fingerprint=fingerprint)
     return StageResult(rows_published=row_count)
@@ -206,7 +214,7 @@ def silver_publish(
         F.col("_ingest_ts").alias("_bronze_ingest_ts"),
         F.col("_source_file").alias("_bronze_source_file"),
         F.col("_ingest_run_id").alias("_bronze_run_id"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)  # multi-action lineage: cache once (§3.2 fix)
+    ).persist(StorageLevel.MEMORY_AND_DISK)  # read by the publish and the quarantine
 
     valid = (
         F.col("order_id").isNotNull()
@@ -215,8 +223,12 @@ def silver_publish(
         & F.col("order_purchase_ts").isNotNull()
         & F.col("order_status").isin(*ALLOWED_STATUSES)
     )
-    clean = normalized.filter(valid)
-    invalid = normalized.filter(~valid)
+    # Preclean counts ride the publish write (observed above the cache,
+    # so the quarantine write below does not count again).
+    split = Observation()
+    clean = normalized.observe(
+        split, F.count(F.lit(1)).alias("rows"), F.count_if(valid).alias("valid")
+    ).filter(valid)
 
     # W1 deterministic dedup; losers quarantined
     # (orders_bronze_to_silver.py:79-90).
@@ -228,27 +240,37 @@ def silver_publish(
     ]
     deduped = dedup_top1(clean, ["order_id"], order)
 
-    n_invalid = invalid.count()
-    n_clean = clean.count()
-    n_dedup = deduped.count()
-    if n_invalid:
-        invalid.write.mode("overwrite").parquet(f"{quarantine_dir}/preclean_invalid")
-    n_rejected_dups = n_clean - n_dedup
-
     silver_out = (
         deduped.withColumn("_silver_run_id", F.lit(run_id))
         .withColumn("_silver_ts", F.current_timestamp())
         .withColumn("_schema_version", F.lit(_contract("silver_orders").contract_hash))
     )
 
-    report = run_checks(silver_out, _SILVER_DQ_CHECKS, quarantine_dir=quarantine_dir)
-    if not report.ok:
+    blocked = None
+    try:
+        commit = ManagedTable(spark, silver_path, keys=["order_id"]).merge(
+            silver_out, checks=_SILVER_DQ_CHECKS
+        )
+    except MergeBlocked as exc:  # the staged write ran: counts are in
+        blocked = exc
+    counts = split.get
+    n_invalid = counts["rows"] - counts["valid"]
+    if n_invalid:
+        normalized.filter(~valid).write.mode("overwrite").parquet(
+            f"{quarantine_dir}/preclean_invalid"
+        )
+    if blocked is not None:
+        # failure path only: a check pass of its own for the samples
+        run_checks(silver_out, _SILVER_DQ_CHECKS, quarantine_dir=quarantine_dir)
         normalized.unpersist()
         raise DQGateFailure(
-            f"critical DQ failures: {[r.name for r in report.blocking_failures]}"
-        )
-
-    ManagedTable(spark, silver_path, keys=["order_id"]).merge(silver_out)
+            "critical DQ failures: "
+            f"{[r.name for r in blocked.report.blocking_failures]}"
+        ) from blocked
+    normalized.unpersist()
+    report = commit.report
+    n_dedup = report.row_count
+    n_rejected_dups = counts["valid"] - n_dedup
     log_event(
         "silver_published", run_id,
         rows=n_dedup, invalid=n_invalid, duplicate_rejects=n_rejected_dups,
@@ -258,7 +280,6 @@ def silver_publish(
         run_id,
         {"stage": "silver", "rows_published": n_dedup, "dq": report.to_dict()},
     )
-    normalized.unpersist()
     return StageResult(
         rows_published=n_dedup,
         rows_rejected=n_invalid + n_rejected_dups,
@@ -280,19 +301,14 @@ def gold_features(
     as_of_date: str,
     run_id: str,
     feature_version: str | None = None,
-    observed_gates: bool = False,
 ) -> StageResult:
     """Point-in-time feature snapshot + gates + MERGE on the grain.
 
-    ``observed_gates=True`` switches from the reference's
-    gate-then-publish (one dedicated ``run_checks`` aggregation job,
-    then the MERGE — two scans of the feature frame) to
-    :meth:`ManagedTable.merge_gated`: the row-predicate gates ride the
-    staged publish write via ``df.observe`` and the HEAD swap happens
-    only if they pass. The contract's ``grain_unique`` gate is not a
-    row predicate, but MERGE's own unique-source probe enforces the
-    identical (customer_id, as_of_date) grain, so nothing is lost. At
-    100 TB this removes a full extra pass over gold per publish.
+    The contract's gates ride the MERGE write (``merge(checks=...)``):
+    one pass computes the features, counts every gate and publishes,
+    and a failing gate abandons the staged snapshot before the claim.
+    ``grain_unique`` is the merge's own duplicate-key count over
+    (customer_id, as_of_date).
     """
     silver = ManagedTable(spark, silver_path, keys=["order_id"]).read()
     orders = silver.select(
@@ -314,26 +330,15 @@ def gold_features(
         .withColumn("_feature_version", F.lit(fv))
         .withColumn("_gold_run_id", F.lit(run_id))
         .withColumn("_gold_ts", F.current_timestamp())
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
     table = ManagedTable(spark, gold_path, keys=["customer_id", "as_of_date"])
-    if observed_gates:
-        row_gates = [g for g in _GOLD_GATES if g["type"] != "unique"]
-        try:
-            report = table.merge_gated(feats, row_gates)
-        except ValueError as exc:
-            feats.unpersist()
-            raise DQGateFailure(f"gold gates failed: {exc}") from exc
-        n = report.row_count
-    else:
-        report = run_checks(feats, _GOLD_GATES)
-        if not report.ok:
-            feats.unpersist()
-            raise DQGateFailure(
-                f"gold gates failed: {[r.name for r in report.blocking_failures]}"
-            )
-        n = feats.count()
-        table.merge(feats)
+    try:
+        report = table.merge(feats, checks=_GOLD_GATES).report
+    except MergeBlocked as exc:
+        raise DQGateFailure(
+            f"gold gates failed: {[r.name for r in exc.report.blocking_failures]}"
+        ) from exc
+    n = report.row_count
     log_event("gold_published", run_id, rows=n, as_of_date=as_of_date, snapshot_id=snapshot_id)
     _write_stage_metadata(
         gold_path,
@@ -347,7 +352,6 @@ def gold_features(
             "gates": report.to_dict(),
         },
     )
-    feats.unpersist()
     return StageResult(rows_published=n, metadata=report.to_dict())
 
 
@@ -368,6 +372,21 @@ def label_snapshot(
         F.to_date("order_purchase_ts").alias("order_date"),
         "order_status",
     )
+    # Eligibility gate (labels.py:154-163), checked before anything is
+    # staged: churn_labels' broadcast bound frame yields an EMPTY spine
+    # when as_of + horizon exceeds max(order_date). Publishing that
+    # would silently produce an empty training set, so fail loudly like
+    # the reference does.
+    end = orders.agg(F.max("order_date")).collect()[0][0]
+    if end is not None and (
+        dt.date.fromisoformat(str(as_of_date)) + dt.timedelta(days=horizon_days) > end
+    ):
+        raise DQGateFailure(
+            "Requested as_of_date is not training-eligible because the full "
+            "future label window is not observable. "
+            f"as_of_date={as_of_date}, label_horizon_days={horizon_days}, "
+            f"dataset_end_date={end}"
+        )
     labels = (
         churn_labels(
             orders,
@@ -384,33 +403,26 @@ def label_snapshot(
         {"name": "grain_unique", "type": "unique", "keys": ["customer_id", "as_of_date"]},
         {"name": "label_domain", "type": "domain", "column": "churn_label", "allowed": [0, 1]},
     ]
-    labels = labels.persist(StorageLevel.MEMORY_AND_DISK)
-    report = run_checks(labels, gates)
-    if not report.ok:
-        labels.unpersist()
-        raise DQGateFailure(
-            f"label gates failed: {[r.name for r in report.blocking_failures]}"
+    try:
+        report = (
+            ManagedTable(spark, labels_path, keys=["customer_id", "as_of_date"])
+            .merge(labels, checks=gates)
+            .report
         )
-    n = labels.count()
-    if n == 0 and orders.limit(1).count() > 0:
-        # Eligibility gate (labels.py:154-163): churn_labels' broadcast
-        # bound frame yields an EMPTY spine when as_of + horizon exceeds
-        # max(order_date). Publishing that would silently produce an
-        # empty training set, so fail loudly like the reference does.
-        labels.unpersist()
-        end = orders.agg(F.max("order_date")).collect()[0][0]
+    except MergeBlocked as exc:
         raise DQGateFailure(
-            "Requested as_of_date is not training-eligible because the full "
-            "future label window is not observable. "
-            f"as_of_date={as_of_date}, label_horizon_days={horizon_days}, "
-            f"dataset_end_date={end}"
-        )
-    ManagedTable(spark, labels_path, keys=["customer_id", "as_of_date"]).merge(labels)
-    labels.unpersist()
-    return StageResult(rows_published=n, metadata=report.to_dict())
+            f"label gates failed: {[r.name for r in exc.report.blocking_failures]}"
+        ) from exc
+    return StageResult(rows_published=report.row_count, metadata=report.to_dict())
 
 
 # ------------------------------------------- training snapshot + serving
+
+
+_SNAPSHOT_GATES = [
+    {"name": "single_feature_version", "type": "single_value", "column": "_feature_version"},
+    {"name": "single_label_horizon", "type": "single_value", "column": "_label_horizon_days"},
+]
 
 
 def training_snapshot_publish(
@@ -437,13 +449,14 @@ def training_snapshot_publish(
         .withColumn("_training_ts", F.current_timestamp())
     )
     # A8 version-homogeneity gates (build_training_snapshot.py:32-38):
-    # exactly one feature version and one label horizon in the snapshot.
-    fv = assert_single_value(snap, "_feature_version")
-    assert_single_value(snap, "_label_horizon_days")
-    n = snap.count()
-    ManagedTable(
-        spark, snapshot_path, keys=["customer_id", "as_of_date"]
-    ).merge(snap)
+    # exactly one feature version and one label horizon in the snapshot,
+    # checked on the publish write itself.
+    report = (
+        ManagedTable(spark, snapshot_path, keys=["customer_id", "as_of_date"])
+        .merge(snap, checks=_SNAPSHOT_GATES)
+        .report
+    )
+    fv, n = report.results[0].value, report.row_count
     _write_stage_metadata(
         snapshot_path,
         run_id,
@@ -472,6 +485,8 @@ def latest_features_export(
             F.col("_snapshot_id").desc_nulls_last(),
         ],
     )
-    latest.write.mode("overwrite").parquet(export_path)
-    n = spark.read.parquet(export_path).count()
-    return StageResult(rows_published=n)
+    rows = Observation()
+    latest.observe(rows, F.count(F.lit(1)).alias("n")).write.mode(
+        "overwrite"
+    ).parquet(export_path)
+    return StageResult(rows_published=rows.get["n"])

@@ -11,6 +11,19 @@ the semantics over plain parquet:
   ⟕anti source on keys). Equivalent to Delta's
   ``whenMatchedUpdateAll().whenNotMatchedInsertAll()`` for sources
   that are unique per key (enforced).
+- Every write is ONE Spark action: the staged snapshot write. What the
+  caller needs to know rides that action as a ``df.observe``: source,
+  upsert and tombstone rows, matched (updated / deleted) target rows,
+  duplicate merge keys and the ``checks=`` gate counts. A verdict on
+  those numbers runs after staging and before the claim, so a failing
+  gate or a non-unique source abandons the staged dir unpublished.
+  Each commit's ``commitInfo`` carries Delta-style ``operation`` and
+  ``operationMetrics`` (rows from the observation and the parquet
+  footers, files and bytes from the add actions), returned to the
+  caller as a :class:`Commit` and listed by ``history()``.
+- Each snapshot records its scan schema (``_schema.json``) when it is
+  staged, so reads and the delta-log mirror never run a
+  schema-inference job.
 - Writes stage a snapshot dir, then CLAIM the next commit sequence by
   creating ``_commits/{seq}.commit`` with O_CREAT|O_EXCL — the
   filesystem's put-if-absent CAS, the same coordination primitive as
@@ -34,18 +47,79 @@ import os
 import shutil
 import time
 import uuid
+from dataclasses import dataclass
+from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.window import Window
 
+from ecom_churn_lakehouse_spark.dq.checks import (
+    DQReport,
+    check_aggregates,
+    report_from_metrics,
+    run_checks,
+)
 from ecom_churn_lakehouse_spark.session import HAVE_DELTA
 
-__all__ = ["ManagedTable"]
+__all__ = ["Commit", "ManagedTable", "MergeBlocked"]
 
 _HEAD = "_HEAD"
 _COMMITS = "_commits"
 #: Delta-protocol checkpoint pointer file (literal name per spec).
 _LAST_CKPT = "_last_checkpoint"
+#: Scan schema of a snapshot, written beside its data files (a leading
+#: underscore keeps it out of Spark's file listing).
+_SCHEMA = "_schema.json"
+
+
+@dataclass(frozen=True)
+class Commit:
+    """What one write published: its log version, the Delta operation
+    name (WRITE / APPEND / MERGE / OPTIMIZE), its ``operationMetrics``
+    and, for a merge, the gate report over the upserted rows."""
+
+    version: int
+    operation: str
+    metrics: dict[str, int]
+    report: DQReport | None = None
+
+
+class MergeBlocked(ValueError):
+    """A merge verdict refused the staged snapshot (non-unique source
+    or a failing critical gate); nothing was published. ``report``
+    holds the gate results."""
+
+    def __init__(self, message: str, report: DQReport):
+        super().__init__(message)
+        self.report = report
+
+
+def _nullable(dt: T.DataType) -> T.DataType:
+    """``dt`` with every field, element and value nullable, as Spark
+    reports any parquet scan."""
+    if isinstance(dt, T.StructType):
+        return T.StructType(
+            [
+                T.StructField(f.name, _nullable(f.dataType), True, f.metadata)
+                for f in dt.fields
+            ]
+        )
+    if isinstance(dt, T.ArrayType):
+        return T.ArrayType(_nullable(dt.elementType), True)
+    if isinstance(dt, T.MapType):
+        return T.MapType(_nullable(dt.keyType), _nullable(dt.valueType), True)
+    return dt
+
+
+def _scan_schema(df: DataFrame, partition_by: list[str] | None) -> T.StructType:
+    """The schema a parquet scan of ``df``'s written snapshot reports:
+    data columns first, then partition columns, all nullable."""
+    parts = set(partition_by or [])
+    fields = [f for f in df.schema.fields if f.name not in parts]
+    fields += [T.StructField(c, df.schema[c].dataType) for c in partition_by or []]
+    return _nullable(T.StructType(fields))
 
 
 class ManagedTable:
@@ -113,13 +187,30 @@ class ManagedTable:
                 reader = reader.option("versionAsOf", version)
             return reader.load(self.path)
         if version is None:
-            return self.spark.read.parquet(self._head_dir())
+            return self._scan(self._head_dir())
         target = os.path.join(self.path, version)
         if not os.path.isdir(target):
             raise ValueError(
                 f"version {version!r} not retained; available: {self.versions()}"
             )
-        return self.spark.read.parquet(target)
+        return self._scan(target)
+
+    @staticmethod
+    def _recorded_schema(snapshot: str) -> T.StructType | None:
+        try:
+            with open(os.path.join(snapshot, _SCHEMA)) as f:
+                return T.StructType.fromJson(json.load(f))
+        except FileNotFoundError:
+            return None
+
+    def _scan(self, snapshot: str) -> DataFrame:
+        """Scan a snapshot dir with the schema recorded when it was
+        staged — no inference job. Snapshots staged before schemas were
+        recorded fall back to inference."""
+        schema = self._recorded_schema(snapshot)
+        if schema is None:
+            return self.spark.read.parquet(snapshot)
+        return self.spark.read.schema(schema).parquet(snapshot)
 
     # ------------------------------------------------------------ writes
     #
@@ -201,18 +292,30 @@ class ManagedTable:
         d = self._committed_dir()
         if d is None:
             raise FileNotFoundError(f"no committed snapshot at {self.path}")
-        return self.spark.read.parquet(d)
+        return self._scan(d)
+
+    def _read_base(self) -> DataFrame | None:
+        """The committed snapshot a write builds on, or None for a
+        table with no commit yet."""
+        try:
+            return self._read_committed()
+        except FileNotFoundError:
+            return None
 
     def _stage(self, df: DataFrame, partition_by: list[str] | None) -> str:
         """Stage a snapshot in a hidden dir (the WRITE half of a
-        commit). Runs the Spark action but publishes nothing — readers
-        and the vacuum never touch ``.staged-*`` dirs, so a concurrent
-        winner's cleanup cannot delete a racer's in-flight write."""
+        commit). Runs the Spark action — the only one of the commit —
+        and records the scan schema beside the data files, but
+        publishes nothing: readers and the vacuum never touch
+        ``.staged-*`` dirs, so a concurrent winner's cleanup cannot
+        delete a racer's in-flight write."""
         target = os.path.join(self.path, f".staged-{uuid.uuid4().hex[:8]}")
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(target)
+        with open(os.path.join(target, _SCHEMA), "w") as f:
+            f.write(_scan_schema(df, partition_by).json())
         return target
 
     def _abandon_staged(self, staged: str) -> None:
@@ -299,6 +402,7 @@ class ManagedTable:
         staged: str,
         claim_seq: int,
         partition_by: list[str] | None = None,
+        commit_info: dict | None = None,
     ) -> bool:
         """CAS: claim ``claim_seq`` by hard-linking a fully-written
         temp file into the commit log (``os.link`` fails-if-exists —
@@ -309,7 +413,8 @@ class ManagedTable:
         always resolves to an existing snapshot; a crash between
         rename and claim leaves only an unclaimed orphan dir that the
         next vacuum collects. On conflict the rename is undone and
-        False is returned."""
+        False is returned. ``commit_info`` (operation, parameters,
+        metrics) goes into the delta-log mirror's commitInfo."""
         os.makedirs(self.path, exist_ok=True)
         cdir = os.path.join(self.path, _COMMITS)
         os.makedirs(cdir, exist_ok=True)
@@ -329,7 +434,7 @@ class ManagedTable:
             return False
         finally:
             os.remove(tmp)
-        self._write_delta_log(claim_seq, versioned, partition_by)
+        self._write_delta_log(claim_seq, versioned, partition_by, commit_info)
         self._swap_head(version)
         return True
 
@@ -457,8 +562,8 @@ class ManagedTable:
     def history(self) -> list[dict]:
         """Commit history, newest first — the DESCRIBE HISTORY
         analogue: one dict per commit with version, timestamp,
-        operation, and operationParameters from the log's commitInfo
-        actions."""
+        operation, operationParameters and operationMetrics from the
+        log's commitInfo actions."""
         if HAVE_DELTA:
             from delta.tables import DeltaTable  # type: ignore
 
@@ -490,6 +595,9 @@ class ManagedTable:
                                 "operationParameters": info.get(
                                     "operationParameters", {}
                                 ),
+                                "operationMetrics": info.get(
+                                    "operationMetrics", {}
+                                ),
                             }
                         )
                         break
@@ -500,33 +608,42 @@ class ManagedTable:
         version: int,
         versioned: str,
         partition_by: list[str] | None,
+        commit_info: dict | None = None,
     ) -> None:
         """Emit the Delta-protocol action file for commit ``version``.
 
         Our emulation rewrites the full snapshot per commit, so every
         commit is remove(all previous active files) + add(all new) —
         the same shape delta-spark writes for an overwrite txn; the
-        MERGE semantics live in how the new snapshot was BUILT.
+        MERGE semantics live in how the new snapshot was BUILT, and
+        the commitInfo names the operation that built it. The
+        metaData schema is the one recorded at staging (no Spark job).
         """
         ldir = os.path.join(self.path, "_delta_log")
         os.makedirs(ldir, exist_ok=True)
         now_ms = int(time.time() * 1000)
+        info = commit_info or {
+            "operation": "WRITE",
+            "operationParameters": {
+                "mode": "Overwrite",
+                "partitionBy": json.dumps(partition_by or []),
+            },
+        }
         actions: list[dict] = [
             {
                 "commitInfo": {
                     "timestamp": now_ms,
-                    "operation": "WRITE",
-                    "operationParameters": {
-                        "mode": "Overwrite",
-                        "partitionBy": json.dumps(partition_by or []),
-                    },
+                    **info,
                     "engineInfo": "ecom-churn-lakehouse-spark emulation",
                     "txnId": str(uuid.uuid4()),
                 }
             }
         ]
         prev_meta, prev_active = self.delta_log_state(version - 1)
-        schema_string = self.spark.read.parquet(versioned).schema.json()
+        schema = self._recorded_schema(versioned)
+        if schema is None:
+            schema = self.spark.read.parquet(versioned).schema
+        schema_string = schema.json()
         if version == 0 or prev_meta is None:
             actions.append(
                 {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
@@ -827,18 +944,45 @@ class ManagedTable:
         with open(p) as f:
             return json.load(f)
 
+    @staticmethod
+    def _file_metrics(snapshot: str) -> dict[str, int]:
+        """``numFiles`` / ``numOutputBytes`` / ``numOutputRows`` of a
+        snapshot's data files, from the filesystem and the parquet
+        footers, read in this process (no Spark job)."""
+        import pyarrow.parquet as pq
+
+        files = [
+            os.path.join(root, f)
+            for root, _, names in os.walk(snapshot)
+            for f in names
+            if f.endswith(".parquet")
+        ]
+        return {
+            "numFiles": len(files),
+            "numOutputBytes": sum(os.path.getsize(f) for f in files),
+            "numOutputRows": sum(pq.read_metadata(f).num_rows for f in files),
+        }
+
     def _occ_publish(
         self,
-        build,
+        build: Callable[[], tuple[DataFrame, Callable]],
+        operation: str,
+        parameters: dict[str, str],
         partition_by: list[str] | None = None,
         base_dependent: bool = True,
         max_retries: int = 8,
-    ) -> None:
+    ) -> Commit:
         """Optimistic-concurrency publish loop: stage ``build()``,
         CAS-claim the next seq, and on conflict re-read + re-apply
         (``base_dependent=True``, the MERGE/append path — the frame
         must be recomputed against the winner's snapshot) or just
-        re-claim (``base_dependent=False``, blind overwrite)."""
+        re-claim (``base_dependent=False``, blind overwrite).
+
+        ``build()`` returns ``(frame, verdict)``. ``verdict()`` runs
+        after the staged write and before the claim: it returns the
+        observed ``(metrics, report)`` or raises, which abandons the
+        staged dir unpublished. Every restaged attempt calls
+        ``build()`` again, so each gets a fresh ``Observation``."""
         staged: str | None = None
         try:
             for _ in range(max_retries + 1):
@@ -850,12 +994,21 @@ class ManagedTable:
                 ):
                     if staged is not None:
                         self._abandon_staged(staged)
-                    staged = self._stage(build(), partition_by)
+                        staged = None
+                    frame, verdict = build()
+                    staged = self._stage(frame, partition_by)
+                    observed, report = verdict()
+                    metrics = {**observed, **self._file_metrics(staged)}
                     # a commit that landed while we were staging makes
                     # our frame stale — claim only our read's successor
-                if self._try_publish(staged, base_seq + 1, partition_by):
+                info = {
+                    "operation": operation,
+                    "operationParameters": parameters,
+                    "operationMetrics": metrics,
+                }
+                if self._try_publish(staged, base_seq + 1, partition_by, info):
                     staged = None
-                    return
+                    return Commit(base_seq + 1, operation, metrics, report)
         finally:
             if staged is not None:
                 self._abandon_staged(staged)
@@ -864,28 +1017,53 @@ class ManagedTable:
             f"lost the CAS at {self.path}"
         )
 
-    def _commit(self, df: DataFrame, partition_by: list[str] | None) -> None:
-        """Base-independent publish (the frame does not derive from the
-        table's current state)."""
-        self._occ_publish(lambda: df, partition_by, base_dependent=False)
+    def _delta_commit(self, report: DQReport | None = None) -> Commit:
+        """The :class:`Commit` of the Delta transaction just run, from
+        the table history (delta-spark records operationMetrics)."""
+        from delta.tables import DeltaTable  # type: ignore
 
-    def overwrite(self, df: DataFrame, partition_by: list[str] | None = None) -> None:
-        """S6 initial/overwrite publish."""
+        last = DeltaTable.forPath(self.spark, self.path).history(1).collect()[0]
+        metrics = {
+            k: int(v)
+            for k, v in (last["operationMetrics"] or {}).items()
+            if str(v).isdigit()
+        }
+        if (last["operationParameters"] or {}).get("mode") == "Append":
+            # a Delta append writes only the new rows
+            metrics.setdefault("numSourceRows", metrics.get("numOutputRows", 0))
+        return Commit(int(last["version"]), last["operation"], metrics, report)
+
+    @staticmethod
+    def _write_params(mode: str, partition_by: list[str] | None) -> dict[str, str]:
+        return {"mode": mode, "partitionBy": json.dumps(partition_by or [])}
+
+    def overwrite(
+        self, df: DataFrame, partition_by: list[str] | None = None
+    ) -> Commit:
+        """S6 initial/overwrite publish (operation WRITE)."""
         if HAVE_DELTA:
             w = df.write.format("delta").mode("overwrite")
             if partition_by:
                 w = w.partitionBy(*partition_by)
             w.save(self.path)
-            return
-        self._commit(df, partition_by)
+            return self._delta_commit()
+        return self._occ_publish(
+            lambda: (df, lambda: ({}, None)),
+            "WRITE",
+            self._write_params("Overwrite", partition_by),
+            partition_by,
+            base_dependent=False,
+        )
 
     def append(
         self,
         df: DataFrame,
         partition_by: list[str] | None = None,
         evolve_schema: bool = False,
-    ) -> None:
-        """S4/S5 append-only sink (bronze, audit log).
+    ) -> Commit:
+        """S4/S5 append-only sink (bronze, audit log); operation APPEND,
+        with ``numSourceRows`` = the rows of ``df``, observed during the
+        write.
 
         ``evolve_schema=True`` widens the table to the union of the
         current and incoming columns (new columns backfill NULL for
@@ -900,23 +1078,57 @@ class ManagedTable:
             if partition_by:
                 w = w.partitionBy(*partition_by)
             w.save(self.path)
-            return
-        if not self.exists():
-            self._commit(df, partition_by)
-        else:
-            self._occ_publish(
-                lambda: self._read_committed().unionByName(
-                    df, allowMissingColumns=evolve_schema
-                ),
-                partition_by,
+            return self._delta_commit()
+
+        def build():
+            obs = Observation()
+            incoming = df.observe(obs, F.count(F.lit(1)).alias("numSourceRows"))
+            current = self._read_base()
+            if current is not None:
+                incoming = current.unionByName(
+                    incoming, allowMissingColumns=evolve_schema
+                )
+            return incoming, lambda: (
+                {"numSourceRows": int(obs.get["numSourceRows"])},
+                None,
             )
+
+        return self._occ_publish(
+            build, "APPEND", self._write_params("Append", partition_by), partition_by
+        )
+
+    def _validate_checks(self, checks: list[dict]) -> None:
+        for spec in checks:
+            if spec["type"] == "unique" and set(spec["keys"]) != set(self.keys):
+                raise ValueError(
+                    "merge checks must be row-predicate, single_value, or "
+                    f"unique on the merge keys {self.keys}; got unique on "
+                    f"{spec['keys']}"
+                )
+
+    def _verdict(self, dup_groups: int, report: DQReport) -> None:
+        """Refuse a merge whose source repeats a key (MERGE would be
+        nondeterministic) or fails a critical gate."""
+        problems = []
+        if dup_groups:
+            problems.append(
+                f"merge source not unique on keys {self.keys} "
+                f"({dup_groups} duplicated key groups)"
+            )
+        if not report.ok:
+            problems.append(
+                f"failed gates {[r.name for r in report.blocking_failures]}"
+            )
+        if problems:
+            raise MergeBlocked("merge blocked: " + "; ".join(problems), report)
 
     def merge(
         self,
         source: DataFrame,
         delete_col: str | None = None,
         evolve_schema: bool = False,
-    ) -> None:
+        checks: list[dict] | None = None,
+    ) -> Commit:
         """S7 keyed upsert: update-all when matched, insert-all otherwise.
 
         Requires ``source`` unique per key (the reference guarantees
@@ -931,27 +1143,53 @@ class ManagedTable:
         ``evolve_schema=True`` lets the source carry columns the table
         doesn't have yet; the table widens and existing rows backfill
         NULL (Delta ``autoMerge`` semantics).
+
+        ``checks`` are DQ gates (``dq.checks`` specs) over the upserted
+        rows: row predicates, ``single_value``, and ``unique`` on the
+        merge keys (its ``bad_rows`` = duplicated key groups of the
+        source).
+
+        One Spark action: current ∪ source is shuffled once on the
+        keys, a window over each key decides which rows survive, and
+        one ``df.observe`` on that frame counts source, upsert and
+        tombstone rows, matched target rows, duplicated keys and every
+        gate. The verdict runs on those counts after the staged write
+        and before the claim, so a non-unique source raises
+        :class:`MergeBlocked` (a ``ValueError``, "… not unique …") and
+        a failing critical gate raises it naming the gates; either way
+        nothing is published. Returns the :class:`Commit` (operation
+        MERGE); ``commit.report.row_count`` is the upserted rows.
+
+        With delta-spark the gates run as their own pass first
+        (gate-then-MERGE): observation across the MERGE command is not
+        guaranteed there.
         """
-        dup = (
-            source.groupBy(*self.keys).count().filter(F.col("count") > 1).limit(1)
+        checks = list(checks or [])
+        self._validate_checks(checks)
+        keys = self.keys
+        upsert = (
+            F.coalesce(~F.col(delete_col), F.lit(False))
+            if delete_col is not None
+            else F.lit(True)
         )
-        if dup.count() > 0:
-            raise ValueError(f"merge source not unique on keys {self.keys}")
-        if delete_col is not None:
-            upserts = source.filter(~F.col(delete_col)).drop(delete_col)
-        else:
-            upserts = source
-        if not self.exists():
-            self.overwrite(upserts)
-            return
+        data_cols = [c for c in source.columns if c != delete_col]
         if HAVE_DELTA:
+            dup = (
+                source.groupBy(*keys).count().filter(F.col("count") > 1).count()
+            )
+            upserts = source.filter(upsert).select(*data_cols)
+            report = run_checks(upserts, checks)
+            self._verdict(dup, report)
+            if not self.exists():
+                self.overwrite(upserts)
+                return self._delta_commit(report)
             from delta.tables import DeltaTable  # type: ignore
 
             if evolve_schema:
                 self.spark.conf.set(
                     "spark.databricks.delta.schema.autoMerge.enabled", "true"
                 )
-            cond = " AND ".join(f"t.{k} = s.{k}" for k in self.keys)
+            cond = " AND ".join(f"t.{k} = s.{k}" for k in keys)
             tgt = DeltaTable.forPath(self.spark, self.path).alias("t")
             if delete_col is None:
                 (
@@ -961,7 +1199,6 @@ class ManagedTable:
                     .execute()
                 )
             else:
-                data_cols = [c for c in source.columns if c != delete_col]
                 sets = {c: f"s.{c}" for c in data_cols}
                 (
                     tgt.merge(source.alias("s"), cond)
@@ -972,97 +1209,78 @@ class ManagedTable:
                     )
                     .execute()
                 )
-            return
-        def build() -> DataFrame:
+            return self._delta_commit(report)
+
+        is_src, up = F.col("__mt_src"), F.col("__mt_up")
+        n_src, hit = F.col("__mt_nsrc"), F.col("__mt_hit")
+        keyed = F.lit(True)
+        for k in keys:
+            keyed = keyed & F.col(k).isNotNull()
+        # a target row is displaced by any source row on its (non-NULL)
+        # key; hit = 1 when one of those source rows is an upsert
+        matched = ~is_src & keyed & (n_src > 0)
+
+        def build():
             # Re-resolved from the commit LOG on every (re)try: a racer
             # that lost the CAS re-applies its upserts on top of the
             # winner's snapshot — serializable outcome, no lost update.
-            current = self._read_committed()
-            # Deletes and upserts alike displace the current row for
-            # their key; only upserts come back in.
-            kept = current.join(
-                source.select(*self.keys), on=self.keys, how="left_anti"
+            current = self._read_base()
+            tagged = source.select(
+                *data_cols, upsert.alias("__mt_up"), F.lit(True).alias("__mt_src")
             )
-            if evolve_schema:
-                return kept.unionByName(upserts, allowMissingColumns=True)
-            extra = set(upserts.columns) - set(current.columns)
-            if extra:
-                raise ValueError(
-                    f"merge source has columns not in table: {sorted(extra)}; "
-                    "pass evolve_schema=True to widen the table"
-                )
-            return kept.unionByName(upserts.select(*current.columns))
-
-        self._occ_publish(build, None)
-
-    def merge_gated(self, source: DataFrame, checks: list[dict]) -> "DQReport":
-        """Keyed MERGE with DQ gates observed DURING the publish write.
-
-        The classic gate-then-publish (``run_checks`` + ``merge``) scans
-        the source twice; here the row-predicate counts ride the staged
-        snapshot write itself (``df.observe`` — executor-side
-        accumulation, zero extra jobs) and the HEAD swap happens only if
-        every critical check passes. On failure the staged snapshot is
-        abandoned: readers never see it, exactly like a failed Delta
-        transaction. Raises :class:`ValueError` listing the failures.
-
-        Returns the :class:`DQReport` either way the gates pass.
-        """
-        from ecom_churn_lakehouse_spark.dq.checks import (
-            observe_checks,
-            report_from_observation,
-            run_checks,
-        )
-
-        if HAVE_DELTA:
-            # Delta MERGE is its own transaction; observation semantics
-            # across the MERGE command aren't guaranteed, so gate first.
-            report = run_checks(source, checks)
-            if not report.ok:
-                raise ValueError(
-                    "merge_gated blocked: "
-                    f"{[r.name for r in report.blocking_failures]}"
-                )
-            self.merge(source)
-            return report
-
-        dup = source.groupBy(*self.keys).count().filter(F.col("count") > 1).limit(1)
-        if dup.count() > 0:
-            raise ValueError(f"merge source not unique on keys {self.keys}")
-        report = None
-        for _ in range(9):
-            # Read the base seq BEFORE resolving the base snapshot
-            # (mirrors _occ_publish; r8 ADVICE #1): if a concurrent
-            # commit lands at base_seq+1 after this point, our claim of
-            # base_seq+1 FAILS and we re-read — the stale-overwrite
-            # ordering (snapshot first, seq later) could silently
-            # clobber that interleaved merge.
-            base_seq = self._commit_seq()
-            observed, obs = observe_checks(source, checks)
-            if self.exists():
-                current = self._read_committed()
-                kept = current.join(
-                    source.select(*self.keys), on=self.keys, how="left_anti"
-                )
-                frame = kept.unionByName(observed.select(*current.columns))
+            if current is None:
+                both = tagged
             else:
-                frame = observed
-            staged = self._stage(frame, None)
-            report = report_from_observation(obs, checks)
-            if not report.ok:
-                self._abandon_staged(staged)
-                raise ValueError(
-                    "merge_gated blocked: "
-                    f"{[r.name for r in report.blocking_failures]}"
-                )
-            if self._try_publish(staged, base_seq + 1):
-                return report
-            # lost the CAS: a concurrent commit landed while the gated
-            # write ran — abandon and re-observe against the new base
-            self._abandon_staged(staged)
-        raise RuntimeError(
-            f"managed-table commit contention in merge_gated at {self.path}"
-        )
+                extra = set(data_cols) - set(current.columns)
+                if extra and not evolve_schema:
+                    raise ValueError(
+                        f"merge source has columns not in table: {sorted(extra)}; "
+                        "pass evolve_schema=True to widen the table"
+                    )
+                both = current.select(
+                    *current.columns,
+                    F.lit(None).cast("boolean").alias("__mt_up"),
+                    F.lit(False).alias("__mt_src"),
+                ).unionByName(tagged, allowMissingColumns=evolve_schema)
+            w = Window.partitionBy(*keys)
+            both = both.withColumn(
+                "__mt_nsrc", F.sum(is_src.cast("int")).over(w)
+            ).withColumn("__mt_hit", F.max((is_src & up).cast("int")).over(w))
+            obs = Observation()
+            observed = both.observe(
+                obs,
+                F.count_if(is_src).alias("numSourceRows"),
+                F.count_if(matched & (hit == 1)).alias("numTargetRowsUpdated"),
+                F.count_if(matched & (hit == 0)).alias("numTargetRowsDeleted"),
+                F.sum(F.when(is_src & (n_src > 1), 1.0 / n_src)).alias("__dups"),
+                *check_aggregates(checks, where=is_src & up),
+            )
+            frame = observed.filter((is_src & up) | (~is_src & ~matched)).drop(
+                "__mt_up", "__mt_src", "__mt_nsrc", "__mt_hit"
+            )
+
+            def verdict():
+                m = obs.get
+                dup = round(m["__dups"] or 0)
+                report = report_from_metrics(m, checks, lambda spec: dup)
+                self._verdict(dup, report)
+                updated = int(m["numTargetRowsUpdated"])
+                return {
+                    "numSourceRows": int(m["numSourceRows"]),
+                    "numTargetRowsInserted": report.row_count - updated,
+                    "numTargetRowsUpdated": updated,
+                    "numTargetRowsDeleted": int(m["numTargetRowsDeleted"]),
+                }, report
+
+            return frame, verdict
+
+        predicate = " AND ".join(f"t.{k} = s.{k}" for k in keys)
+        return self._occ_publish(build, "MERGE", {"predicate": predicate})
+
+    def merge_gated(self, source: DataFrame, checks: list[dict]) -> DQReport:
+        """``merge(source, checks=checks).report`` under its former
+        name, which ``perfbench/workloads.py`` still instruments."""
+        return self.merge(source, checks=checks).report
 
     # ------------------------------------------------------- maintenance
 
@@ -1072,7 +1290,7 @@ class ManagedTable:
         sort_by: list[str] | None = None,
         target_file_bytes: int = 128 << 20,
         zorder_by: list[str] | None = None,
-    ) -> None:
+    ) -> Commit | None:
         """Small-file compaction (Delta OPTIMIZE analogue).
 
         Streaming/incremental sinks accrete many small files; at scale
@@ -1091,6 +1309,9 @@ class ManagedTable:
         - with ``zorder_by``: the same, but ordered by a Morton code
           over the given columns (sources/zorder.py), so file stats
           prune on EVERY listed dimension, not just the first.
+
+        The emulation's commit is an OPTIMIZE; delta-spark's returns
+        its own metrics frame, so this returns None there.
         """
         if HAVE_DELTA:
             from delta.tables import DeltaTable  # type: ignore
@@ -1102,7 +1323,7 @@ class ManagedTable:
                 opt.executeZOrderBy(*sort_by)
             else:
                 opt.executeCompaction()
-            return
+            return None
         head = self._head_dir()
         if target_files is None:
             total = sum(
@@ -1112,7 +1333,7 @@ class ManagedTable:
                 if f.endswith(".parquet")
             )
             target_files = max(1, math.ceil(total / target_file_bytes))
-        def build() -> DataFrame:
+        def rewrite() -> DataFrame:
             # Re-read per OCC attempt: a data commit racing the
             # compaction must not be clobbered by a stale rewrite.
             df = self._read_committed()
@@ -1142,7 +1363,11 @@ class ManagedTable:
         # Partition-dir layout is not preserved: a sorted compaction IS
         # the layout. Callers that need dir partitioning re-publish via
         # overwrite(partition_by=...).
-        self._occ_publish(build, None)
+        return self._occ_publish(
+            lambda: (rewrite(), lambda: ({}, None)),
+            "OPTIMIZE",
+            {"zOrderBy": json.dumps(zorder_by or sort_by or [])},
+        )
 
     def diff_versions(
         self, old: str, new: str | None = None

@@ -19,3 +19,23 @@ def spark():
     )
     s.sparkContext.setLogLevel("ERROR")
     yield s
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)`` runs ``fn`` under a job group of its own and
+    returns ``(fn's result, number of Spark jobs it launched)``."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def run(fn):
+        group = f"count-jobs-{uuid.uuid4().hex[:8]}"
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return run

@@ -89,6 +89,24 @@ def test_ordering_check_nulls_fail(spark):
     assert report.results[0].bad_rows == 2
 
 
+def test_single_value_check(spark):
+    """A8 homogeneity as a check: one aggregation pass (min/max/non-null
+    count), so it can also ride a publish write."""
+    spec = [{"name": "one_fv", "type": "single_value", "column": "fv"}]
+
+    def check(rows):
+        df = spark.createDataFrame(rows, "k int, fv string")
+        return run_checks(df, spec).results[0]
+
+    ok = check([(1, "v1"), (2, "v1")])
+    assert ok.passed and ok.value == "v1" and ok.bad_rows == 0
+    mixed = check([(1, "v1"), (2, "v2"), (3, "v1")])
+    assert not mixed.passed and mixed.bad_rows == 3 and mixed.value is None
+    nulls = check([(1, "v1"), (2, None)])
+    assert not nulls.passed and nulls.bad_rows == 1
+    assert not check([]).passed  # no rows: no single value to agree on
+
+
 # ------------------------------------------------- history + drift
 
 

@@ -129,15 +129,17 @@ def test_time_travel_reads_previous_snapshot(spark, tmp_path):
 def test_merge_gated_publishes_and_reports(spark, tmp_path):
     t = ManagedTable(spark, str(tmp_path / "g"), keys=["k"])
     checks = [{"name": "v_not_null", "type": "not_null", "columns": ["v"]}]
-    rep = t.merge_gated(
-        spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"), checks
-    )
+    rep = t.merge(
+        spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"),
+        checks=checks,
+    ).report
     assert rep.ok and rep.row_count == 2 and rep.results[0].bad_rows == 0
     assert t.read().count() == 2
     # second gated merge: update + insert, gates still observed
-    rep2 = t.merge_gated(
-        spark.createDataFrame([(2, "B"), (3, "c")], "k int, v string"), checks
-    )
+    rep2 = t.merge(
+        spark.createDataFrame([(2, "B"), (3, "c")], "k int, v string"),
+        checks=checks,
+    ).report
     assert rep2.ok and rep2.row_count == 2
     assert {r["k"]: r["v"] for r in t.read().collect()} == {1: "a", 2: "B", 3: "c"}
 
@@ -146,23 +148,27 @@ def test_merge_gated_aborts_before_head_swap(spark, tmp_path):
     t = ManagedTable(spark, str(tmp_path / "g"), keys=["k"])
     t.overwrite(spark.createDataFrame([(1, "a")], "k int, v string"))
     before = t.versions()
-    with pytest.raises(ValueError, match="merge_gated blocked"):
-        t.merge_gated(
+    with pytest.raises(ValueError, match="merge blocked: failed gates"):
+        t.merge(
             spark.createDataFrame([(2, None)], "k int, v string"),
-            [{"name": "v_not_null", "type": "not_null", "columns": ["v"]}],
+            checks=[{"name": "v_not_null", "type": "not_null", "columns": ["v"]}],
         )
     # table unchanged, staged snapshot cleaned up
     assert {r["k"] for r in t.read().collect()} == {1}
     assert t.versions() == before
+    assert not [d for d in os.listdir(t.path) if d.startswith(".staged")]
 
 
 def test_merge_gated_rejects_unique_check_spec(spark, tmp_path):
+    # unique gates must be on the merge keys (the merge's own duplicate
+    # count); any other unique spec is refused before any work
     t = ManagedTable(spark, str(tmp_path / "g"), keys=["k"])
     with pytest.raises(ValueError, match="row-predicate"):
-        t.merge_gated(
+        t.merge(
             spark.createDataFrame([(1, "a")], "k int, v string"),
-            [{"type": "unique", "keys": ["k"]}],
+            checks=[{"type": "unique", "keys": ["v"]}],
         )
+    assert not t.exists()
 
 
 def test_merge_with_cdc_deletes(spark, tmp_path):
@@ -204,6 +210,151 @@ def test_append_schema_evolution(spark, tmp_path):
     )
     rows = {r["k"]: (r["v"], r["origin"]) for r in t.read().collect()}
     assert rows == {1: ("a", None), 2: ("b", "src1")}
+
+
+# ------------------------------------ one action per write: commits
+
+
+def test_merge_commit_metrics_upsert_and_tombstone(spark, tmp_path):
+    """commitInfo carries Delta-style operation + operationMetrics,
+    counted by the write itself and returned by history()."""
+    t = ManagedTable(spark, str(tmp_path / "m"), keys=["k"])
+    w = t.overwrite(
+        spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], "k int, v string")
+    )
+    assert (w.version, w.operation) == (0, "WRITE")
+    assert w.metrics["numOutputRows"] == 3
+    # one delete, one update, one insert, one unmatched tombstone
+    c = t.merge(
+        spark.createDataFrame(
+            [(2, None, True), (3, "C", False), (4, "d", False), (9, None, True)],
+            "k int, v string, _deleted boolean",
+        ),
+        delete_col="_deleted",
+    )
+    files = [f.removeprefix("file:") for f in t.read().inputFiles()]
+    assert (c.version, c.operation) == (1, "MERGE")
+    assert c.metrics == {
+        "numSourceRows": 4,
+        "numTargetRowsInserted": 1,
+        "numTargetRowsUpdated": 1,
+        "numTargetRowsDeleted": 1,
+        "numOutputRows": 3,
+        "numFiles": len(files),
+        "numOutputBytes": sum(os.path.getsize(f) for f in files),
+    }
+    assert c.report.row_count == 2  # upserted rows
+    h = t.history()
+    assert [e["operation"] for e in h] == ["MERGE", "WRITE"]
+    assert h[0]["operationMetrics"] == c.metrics
+    assert h[1]["operationMetrics"] == w.metrics
+    a = t.append(spark.createDataFrame([(5, "e")], "k int, v string"))
+    assert a.operation == "APPEND"
+    assert a.metrics["numSourceRows"] == 1 and a.metrics["numOutputRows"] == 4
+    assert t.history()[0]["operation"] == "APPEND"
+
+
+def test_nonunique_merge_leaves_head_and_versions(spark, tmp_path):
+    t = ManagedTable(spark, str(tmp_path / "u"), keys=["k"])
+    t.overwrite(spark.createDataFrame([(1, "a")], "k int, v string"))
+    head, before, hist = t._head_dir(), t.versions(), t.history()
+    with pytest.raises(ValueError, match="not unique"):
+        t.merge(spark.createDataFrame([(2, "b"), (2, "c")], "k int, v string"))
+    assert t._head_dir() == head and t.versions() == before
+    assert t.history() == hist
+    assert not [d for d in os.listdir(t.path) if d.startswith(".staged")]
+
+
+def test_retried_merge_observes_each_attempt_afresh(spark, tmp_path):
+    """A merge that loses the CAS restages against the winner's snapshot
+    with a fresh Observation: its metrics describe the attempt that
+    landed, not the sum of both."""
+    path = str(tmp_path / "r")
+    t = ManagedTable(spark, path, keys=["k"])
+    t.overwrite(spark.createDataFrame([Row(k="base", v=0)]))
+    other = ManagedTable(spark, path, keys=["k"])
+    real_publish, staged = t._try_publish, []
+
+    def publish_after_an_intruder(stage_dir, seq, *args):
+        staged.append(stage_dir)
+        if len(staged) == 1:  # a concurrent commit lands first
+            other.merge(spark.createDataFrame([Row(k="intruder", v=9)]))
+        return real_publish(stage_dir, seq, *args)
+
+    t._try_publish = publish_after_an_intruder
+    c = t.merge(
+        spark.createDataFrame([Row(k="mine", v=1), Row(k="base", v=2)]),
+        checks=[{"name": "v_not_null", "type": "not_null", "columns": ["v"]}],
+    )
+    assert len(staged) == 2 and staged[0] != staged[1]
+    assert c.version == 2
+    assert c.metrics["numSourceRows"] == 2 and c.report.row_count == 2
+    assert c.metrics["numTargetRowsUpdated"] == 1
+    assert c.metrics["numTargetRowsInserted"] == 1
+    assert c.metrics["numOutputRows"] == 3
+    out = {r["k"]: r["v"] for r in t.read().collect()}
+    assert out == {"base": 2, "intruder": 9, "mine": 1}
+
+
+# ------------------------------------------ scan schema recorded at write
+
+
+def _same_schema_as_inference(spark, t, count_jobs):
+    schema, jobs = count_jobs(lambda: t.read().schema)
+    assert schema == spark.read.parquet(t._head_dir()).schema
+    assert jobs == 0  # recorded at write time, not inferred
+
+
+def test_read_schema_unpartitioned(spark, tmp_path, count_jobs):
+    t = ManagedTable(spark, str(tmp_path / "s"), keys=["k"])
+    t.overwrite(
+        spark.createDataFrame(
+            [(1, "a", 1.5, [1, 2])], "k int not null, v string, x double, a array<int>"
+        )
+    )
+    _same_schema_as_inference(spark, t, count_jobs)
+
+
+def test_read_schema_date_partitioned(spark, tmp_path, count_jobs):
+    t = ManagedTable(spark, str(tmp_path / "p"), keys=["order_id"])
+    data = spark.range(6).select(
+        F.concat(F.lit("o"), F.col("id")).alias("order_id"),
+        F.to_date(F.lit("2025-01-01")).alias("ingest_date"),
+        F.col("id").alias("n"),
+    )
+    t.append(data, partition_by=["ingest_date"])
+    t.append(data, partition_by=["ingest_date"])
+    assert t.read().columns == ["order_id", "n", "ingest_date"]
+    _same_schema_as_inference(spark, t, count_jobs)
+
+
+def test_read_schema_after_evolution(spark, tmp_path, count_jobs):
+    a = ManagedTable(spark, str(tmp_path / "a"), keys=["k"])
+    a.append(spark.createDataFrame([(1, "a")], "k int, v string"))
+    a.append(
+        spark.createDataFrame([(2, "b", 3)], "k int, v string, n int"),
+        evolve_schema=True,
+    )
+    assert a.read().columns == ["k", "v", "n"]
+    _same_schema_as_inference(spark, a, count_jobs)
+    m = ManagedTable(spark, str(tmp_path / "m"), keys=["k"])
+    m.overwrite(spark.createDataFrame([(1, "a")], "k int, v string"))
+    m.merge(
+        spark.createDataFrame([(2, "b", 1.5)], "k int, v string, score double"),
+        evolve_schema=True,
+    )
+    assert m.read().columns == ["k", "v", "score"]
+    _same_schema_as_inference(spark, m, count_jobs)
+
+
+def test_snapshot_without_recorded_schema_reads_by_inference(spark, tmp_path):
+    t = ManagedTable(spark, str(tmp_path / "old"), keys=["k"])
+    t.overwrite(spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"))
+    want = t.read().schema
+    os.remove(os.path.join(t._head_dir(), "_schema.json"))  # pre-change layout
+    assert t.read().schema == want
+    t.merge(spark.createDataFrame([(2, "B")], "k int, v string"))
+    assert {r["k"]: r["v"] for r in t.read().collect()} == {1: "a", 2: "B"}
 
 
 def test_morton_interleave_known_bits(spark):
@@ -479,7 +630,7 @@ def test_delayed_head_swap_cannot_regress_or_destroy(spark, tmp_path):
 
 
 def test_merge_gated_reads_seq_before_snapshot(spark, tmp_path):
-    """r8 ADVICE #1: merge_gated must capture base_seq BEFORE resolving
+    """r8 ADVICE #1: a gated merge must capture base_seq BEFORE resolving
     its base snapshot. A commit interleaved inside the snapshot read
     then forces a CAS conflict + retry, so both merges survive."""
     path = str(tmp_path / "t")
@@ -500,9 +651,9 @@ def test_merge_gated_reads_seq_before_snapshot(spark, tmp_path):
     t._read_committed = read_with_interleaved_commit
     checks = [{"name": "v_not_null", "type": "not_null",
                "columns": ["v"], "severity": "critical"}]
-    report = t.merge_gated(
-        spark.createDataFrame([Row(k="mine", v=1)]), checks
-    )
+    report = t.merge(
+        spark.createDataFrame([Row(k="mine", v=1)]), checks=checks
+    ).report
     assert report.ok
     out = {r["k"]: r["v"] for r in t.read().collect()}
     # NO lost update: the interleaved merge and the gated merge both land
@@ -608,7 +759,7 @@ def test_history_lists_commits_newest_first(spark, tmp_path):
     t.merge(spark.createDataFrame([Row(k="a", v=2)]))
     h = t.history()
     assert [e["version"] for e in h] == [1, 0]
-    assert all(e["operation"] == "WRITE" for e in h)
+    assert [e["operation"] for e in h] == ["MERGE", "WRITE"]
     assert all(isinstance(e["timestamp"], int) for e in h)
 
 

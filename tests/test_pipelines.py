@@ -159,14 +159,12 @@ def test_label_horizon_not_observable_raises(spark, tmp_path):
 
 
 def test_gold_observed_gates(spark, paths, tmp_path, monkeypatch):
-    # observed_gates=True (merge_gated: metrics ride the publish write)
-    # must produce the same gold table as the classic gate-then-publish.
+    # gates ride the publish write (merge(checks=...)): a second publish
+    # into a fresh table reproduces the slice's gold rows
     import ecom_churn_lakehouse_spark.pipelines.medallion as med
 
     gold_obs = str(tmp_path / "gold_obs")
-    g = gold_features(
-        spark, paths["silver"], gold_obs, AS_OF, "run-obs", observed_gates=True
-    )
+    g = gold_features(spark, paths["silver"], gold_obs, AS_OF, "run-obs")
     assert g.rows_published == 2
     keys = ["customer_id", "as_of_date"]
     classic = ManagedTable(spark, paths["gold"], keys=keys).read().filter(
@@ -188,11 +186,55 @@ def test_gold_observed_gates(spark, paths, tmp_path, monkeypatch):
     )
     with pytest.raises(DQGateFailure, match="impossible"):
         med.gold_features(
-            spark, paths["silver"], gold_obs, "2025-04-15", "run-obs2",
-            observed_gates=True,
+            spark, paths["silver"], gold_obs, "2025-04-15", "run-obs2"
         )
     after = ManagedTable(spark, gold_obs, keys=keys).read()
     assert after.count() == 2  # 2025-04-15 rows never landed
+
+
+def test_stage_metadata_lists_every_contract_check(spark, paths):
+    # the slice's silver (run-3) and gold (run-4) publishes gated on the
+    # write; their run metadata still lists every contract check, the
+    # unique ones with bad_rows = duplicated key groups
+    import json
+    import os
+
+    import ecom_churn_lakehouse_spark.pipelines.medallion as med
+
+    for table, run, key, rules in (
+        ("silver", "run-3", "dq", med._SILVER_DQ_CHECKS),
+        ("gold", "run-4", "gates", med._GOLD_GATES),
+    ):
+        with open(os.path.join(paths[table], "_metadata", f"run-{run}.json")) as f:
+            checks = json.load(f)[key]["checks"]
+        assert [c["name"] for c in checks] == [r["name"] for r in rules]
+        assert all(c["passed"] and c["bad_rows"] == 0 for c in checks)
+        assert {c["check_type"] for c in checks} >= {"unique"}
+
+
+def test_silver_gate_failure_quarantines_and_blocks(spark, tmp_path, monkeypatch):
+    import os
+
+    import ecom_churn_lakehouse_spark.pipelines.medallion as med
+
+    raw, bronze, silver, q = (str(tmp_path / n) for n in ("raw", "bronze", "silver", "q"))
+    spark.createDataFrame(RAW_ROWS).write.parquet(raw)
+    bronze_ingest(spark, raw, bronze, str(tmp_path / "audit"), "r1")
+    silver_publish(spark, bronze, silver, q, "r2")
+    table = ManagedTable(spark, silver, keys=["order_id"])
+    head, versions = table._head_dir(), table.versions()
+    monkeypatch.setattr(
+        med,
+        "_SILVER_DQ_CHECKS",
+        med._SILVER_DQ_CHECKS
+        + [{"name": "no_ord_2", "type": "expr", "predicate": "order_id = 'ord-2'"}],
+    )
+    with pytest.raises(DQGateFailure, match="no_ord_2"):
+        med.silver_publish(spark, bronze, silver, q, "r3")
+    assert table._head_dir() == head and table.versions() == versions
+    sample = spark.read.parquet(os.path.join(q, "no_ord_2")).collect()
+    assert [r["order_id"] for r in sample] == ["ord-2"]
+    assert os.path.isdir(os.path.join(q, "preclean_invalid"))
 
 
 def test_bronze_partition_pruning(spark, tmp_path):
@@ -244,3 +286,59 @@ def test_bronze_partition_pruning(spark, tmp_path):
     # ...while a full scan (no partition filter) must touch them and die.
     with pytest.raises(Exception, match="(?i)parquet|magic|footer|corrupt"):
         table.read().count()
+
+
+#: Spark jobs per stage call on the tiny lake. Each publish is one write
+#: action; AQE submits each of its shuffle stages as a job of its own,
+#: so a bound is the write's stage count plus the stage's own reads
+#: (bronze: raw schema inference and the audit probe; labels: the
+#: eligibility bound).
+JOB_BUDGET = {
+    "bronze": 3,
+    "silver": 4,
+    "gold": 5,
+    "labels": 7,
+    "snapshot": 3,
+    "export": 2,
+}
+
+
+def test_stage_job_and_file_budget(spark, tmp_path, count_jobs):
+    """Each stage is one publish write plus its own reads, and the gold
+    and labels snapshots are not split into shuffle-partition files
+    (caching a shuffled frame used to pin them: 32 files each)."""
+    p = {k: str(tmp_path / k) for k in (
+        "raw", "bronze", "audit", "silver", "quarantine", "gold", "labels",
+        "snapshot", "export")}
+    # the slice plus 64 one-order customers, so that the default 32
+    # shuffle partitions all hold rows
+    extra = [
+        Row(order_id=f"ord-x{i}", customer_id=f"cust_x{i}", order_status="delivered",
+            order_purchase_timestamp=f"2025-02-{1 + i % 28:02d} 10:00:00")
+        for i in range(64)
+    ]
+    spark.createDataFrame(RAW_ROWS + extra).write.parquet(p["raw"])
+    calls = {
+        "bronze": lambda: bronze_ingest(spark, p["raw"], p["bronze"], p["audit"], "b"),
+        "silver": lambda: silver_publish(
+            spark, p["bronze"], p["silver"], p["quarantine"], "s"),
+        "gold": lambda: gold_features(spark, p["silver"], p["gold"], AS_OF, "g"),
+        "labels": lambda: label_snapshot(spark, p["silver"], p["labels"], AS_OF, "l"),
+        "snapshot": lambda: training_snapshot_publish(
+            spark, p["gold"], p["labels"], p["snapshot"], AS_OF, "t"),
+        "export": lambda: latest_features_export(spark, p["gold"], p["export"]),
+    }
+    jobs = {}
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "32")  # the engine default
+    try:
+        for stage, fn in calls.items():
+            _, jobs[stage] = count_jobs(fn)
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    over = {s: (n, JOB_BUDGET[s]) for s, n in jobs.items() if n > JOB_BUDGET[s]}
+    assert not over, f"stages over their job budget (jobs, budget): {over}"
+    keys = ["customer_id", "as_of_date"]
+    for name in ("gold", "labels"):
+        files = ManagedTable(spark, p[name], keys=keys).read().inputFiles()
+        assert len(files) <= 2, (name, files)
