@@ -57,8 +57,8 @@ def incremental_gold_update(
     Result rows are bit-identical to a full ``gold_features`` run for
     those customers (asserted in tests/test_incremental.py), because
     the feature plan is per-customer decomposable. The recompute, the
-    gates and the publish are one write; row, tombstone and gate counts
-    come from its commit.
+    gates and the publish are one write; row, deleted-row and gate
+    counts come from its commit.
     """
     gold = ManagedTable(spark, gold_path, keys=["customer_id", "as_of_date"])
     if not gold.exists():
@@ -67,7 +67,7 @@ def incremental_gold_update(
             "full gold_features publish first"
         )
     silver = ManagedTable(spark, silver_path, keys=["order_id"]).read()
-    keys = changed_keys.select("customer_id").distinct()
+    keys = changed_keys.select("customer_id")
     scoped = silver.join(keys, on="customer_id", how="left_semi")
     orders = scoped.select(
         "customer_id",
@@ -81,12 +81,16 @@ def incremental_gold_update(
     # Changed keys with NO surviving orders (full CDC erasure) produce
     # no feature row — without a tombstone their stale gold row would
     # outlive the data that justified it. Every changed key therefore
-    # gets one source row: its recomputed features, or a tombstone
-    # where the left join finds none, and merge(delete_col=...) removes
-    # those in the same pass that upserts the recomputed rows.
-    found = feats.withColumn("_found", F.lit(True))
+    # also enters the merge as a tombstone, ranked after its recomputed
+    # row (``order_by``): the merge's per-key window keeps the features
+    # where they exist and deletes the gold row where they do not, with
+    # no join between keys and features.
     source = (
-        keys.join(found, on="customer_id", how="left")
+        feats.withColumn("_deleted", F.lit(False))
+        .unionByName(
+            keys.select("customer_id", F.lit(True).alias("_deleted")),
+            allowMissingColumns=True,
+        )
         .select(
             *feats.columns,
             F.to_date(F.lit(as_of_date)).alias("as_of_date"),
@@ -94,13 +98,18 @@ def incremental_gold_update(
             F.lit(fv).alias("_feature_version"),
             F.lit(run_id).alias("_gold_run_id"),
             F.current_timestamp().alias("_gold_ts"),
-            F.col("_found").isNull().alias("_deleted"),
+            "_deleted",
         )
     )
     # Same blocking gates as the full run, evaluated over the upserted
     # delta slice only (the untouched remainder already passed them).
     try:
-        commit = gold.merge(source, delete_col="_deleted", checks=_GOLD_GATES)
+        commit = gold.merge(
+            source,
+            delete_col="_deleted",
+            checks=_GOLD_GATES,
+            order_by=[F.col("lifetime_orders").isNull()],  # features first
+        )
     except MergeBlocked as exc:
         raise DQGateFailure(
             f"incremental gold gates failed: "
@@ -108,7 +117,7 @@ def incremental_gold_update(
         ) from exc
     report = commit.report
     n = report.row_count
-    n_deleted = commit.metrics["numSourceRows"] - n
+    n_deleted = commit.metrics["numTargetRowsDeleted"]
     log_event(
         "gold_incremental_published",
         run_id,

@@ -4,9 +4,10 @@ Thin recompositions of the library operators, preserving the
 reference's stage semantics end-to-end (SURVEY.md §3):
 
 - bronze: fingerprint-idempotent append with lineage stamping + audit
-  (``orders_to_bronze.py:188-324``)
-- silver: normalize → preclean split → W1 dedup → quarantine → DQ gate
-  → MERGE on order_id (``orders_bronze_to_silver.py:93-221``)
+  (``orders_to_bronze.py:188-324``); the fingerprint is a ``txn`` id
+  in bronze's own log, so a replay is skipped from the table itself
+- silver: normalize → preclean split → quarantine → W1 dedup + DQ gate
+  + MERGE on order_id in one write (``orders_bronze_to_silver.py:93-221``)
 - gold: point-in-time feature snapshot + quality gates → MERGE on
   (customer_id, as_of_date) (``customer_features_daily.py:215-310``)
 - labels / training snapshot / latest-features export
@@ -31,11 +32,13 @@ Input shape is the reference's raw orders contract: string columns
 from __future__ import annotations
 
 import datetime as dt
+import json
 import os
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 from pyspark import StorageLevel
 
 from ecom_churn_lakehouse_spark.contracts import Contract
@@ -85,8 +88,6 @@ ALLOWED_STATUSES = _contract("silver_orders").allowed_values["order_status"]
 def _write_stage_metadata(path: str, run_id: str, payload: dict) -> None:
     """Per-run JSON sidecar (snapshot/label/DQ metadata pattern,
     customer_features_daily.py:83-107, labels.py:82-112)."""
-    import json
-
     meta_dir = os.path.join(path, "_metadata")
     os.makedirs(meta_dir, exist_ok=True)
     with open(os.path.join(meta_dir, f"run-{run_id}.json"), "w") as f:
@@ -108,6 +109,28 @@ class StageResult:
 # ------------------------------------------------------------------ bronze
 
 
+def _footer_schema(path: str) -> T.StructType:
+    """The schema a parquet read of ``path`` infers, from one file's
+    footer read in this process instead of an inference job: Spark's
+    own schema when a Spark writer left it in the footer, else the
+    Arrow schema (parquet timestamps without a UTC flag as
+    timestamp_ntz, as Spark 4 reads them)."""
+    import pyarrow.parquet as pq
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    if os.path.isdir(path):
+        path = min(
+            os.path.join(path, f)
+            for f in os.listdir(path)
+            if not f.startswith(("_", ".")) and os.path.isfile(os.path.join(path, f))
+        )
+    footer = pq.read_schema(path)
+    recorded = (footer.metadata or {}).get(b"org.apache.spark.sql.parquet.row.metadata")
+    if recorded:
+        return T.StructType.fromJson(json.loads(recorded))
+    return from_arrow_schema(footer, prefer_timestamp_ntz=True)
+
+
 def bronze_ingest(
     spark: SparkSession,
     raw_path: str,
@@ -115,8 +138,17 @@ def bronze_ingest(
     audit_path: str,
     run_id: str,
 ) -> StageResult:
-    """Append-only ingest with fingerprint idempotency + audit trail."""
-    raw = spark.read.parquet(raw_path)
+    """Append-only ingest with fingerprint idempotency + audit trail.
+
+    Idempotency lives in bronze's own log: the append records the raw
+    files' fingerprint as a Delta ``txn`` id in the same commit as the
+    rows, and a run whose fingerprint is already a txn of the table is
+    skipped. The audit row is written after the commit, so a crash
+    between the two can lose an audit row but can never make a replay
+    ingest the file twice. A fresh ingest is two Spark jobs (the append
+    and the audit append), a skipped replay one (the audit append).
+    """
+    raw = spark.read.schema(_footer_schema(raw_path)).parquet(raw_path)
     # Contract validation on read: mismatch aborts the job (bronze
     # behavior, orders_to_bronze.py:45-60). Extras tolerated — raw
     # feeds may carry unused delivery columns (FIXTURES §1.3).
@@ -130,21 +162,11 @@ def bronze_ingest(
     fingerprint = file_fingerprint(files)
 
     audit = ManagedTable(spark, audit_path, keys=["dataset", "fingerprint"])
-    if audit.exists():
-        seen = (
-            audit.read()
-            .filter(
-                (F.col("dataset") == "orders")
-                & (F.col("fingerprint") == fingerprint)
-                & (F.col("status") == "success")
-            )
-            .limit(1)
-            .count()
-        )
-        if seen:
-            _audit_record(spark, audit, run_id, fingerprint, "skipped_already_ingested", 0)
-            log_event("bronze_skipped_already_ingested", run_id, fingerprint=fingerprint)
-            return StageResult(rows_published=0, skipped=True)
+    bronze = ManagedTable(spark, bronze_path, keys=["order_id"])
+    if fingerprint in bronze.transactions():
+        _audit_record(spark, audit, run_id, fingerprint, "skipped_already_ingested", 0)
+        log_event("bronze_skipped_already_ingested", run_id, fingerprint=fingerprint)
+        return StageResult(rows_published=0, skipped=True)
 
     stamped = (
         raw.withColumn("_ingest_run_id", F.lit(run_id))
@@ -154,8 +176,7 @@ def bronze_ingest(
         .withColumn("_source_fingerprint", F.lit(fingerprint))
         .withColumn("_schema_version", F.lit(contract.contract_hash))
     )
-    bronze = ManagedTable(spark, bronze_path, keys=["order_id"])
-    commit = bronze.append(stamped, partition_by=["ingest_date"])
+    commit = bronze.append(stamped, partition_by=["ingest_date"], txn_id=fingerprint)
     row_count = commit.metrics["numSourceRows"]
     _audit_record(spark, audit, run_id, fingerprint, "success", row_count)
     log_event("bronze_ingested", run_id, rows=row_count, fingerprint=fingerprint)
@@ -163,19 +184,13 @@ def bronze_ingest(
 
 
 def _audit_record(spark, audit: ManagedTable, run_id, fingerprint, status, rows):
-    from pyspark.sql import types as T
-
-    schema = T.StructType(
-        [
-            T.StructField("dataset", T.StringType(), False),
-            T.StructField("fingerprint", T.StringType(), False),
-            T.StructField("run_id", T.StringType(), False),
-            T.StructField("status", T.StringType(), False),
-            T.StructField("row_count", T.LongType(), False),
-        ]
-    )
-    rec = spark.createDataFrame(
-        [("orders", fingerprint, run_id, status, rows)], schema=schema
+    """One audit row, built on the JVM side (no Python worker)."""
+    rec = spark.range(1, numPartitions=1).select(
+        F.lit("orders").alias("dataset"),
+        F.lit(fingerprint).alias("fingerprint"),
+        F.lit(run_id).alias("run_id"),
+        F.lit(status).alias("status"),
+        F.lit(rows).cast("long").alias("row_count"),
     )
     audit.append(rec)
 
@@ -187,6 +202,16 @@ def _audit_record(spark, audit: ManagedTable, run_id, fingerprint, status, rows)
 _SILVER_DQ_CHECKS = _contract("silver_orders").quality_rules
 
 
+def _w1_order() -> list:
+    """W1 tie-break: newest purchase, then newest ingest, source file, run."""
+    return [
+        F.col("order_purchase_ts").desc_nulls_last(),
+        F.col("_bronze_ingest_ts").desc_nulls_last(),
+        F.col("_bronze_source_file").desc_nulls_last(),
+        F.col("_bronze_run_id").desc_nulls_last(),
+    ]
+
+
 def silver_publish(
     spark: SparkSession,
     bronze_path: str,
@@ -194,7 +219,8 @@ def silver_publish(
     quarantine_dir: str,
     run_id: str,
 ) -> StageResult:
-    """Normalize + dedup + DQ gate + MERGE publish."""
+    """Normalize + dedup + DQ gate + MERGE publish, the last three one
+    write (``merge(order_by=W1, checks=...)``)."""
     bronze = ManagedTable(spark, bronze_path, keys=["order_id"]).read()
 
     status = F.lower(F.trim(F.col("order_status")))
@@ -223,45 +249,41 @@ def silver_publish(
         & F.col("order_purchase_ts").isNotNull()
         & F.col("order_status").isin(*ALLOWED_STATUSES)
     )
-    # Preclean counts ride the publish write (observed above the cache,
-    # so the quarantine write below does not count again).
-    split = Observation()
-    clean = normalized.observe(
-        split, F.count(F.lit(1)).alias("rows"), F.count_if(valid).alias("valid")
-    ).filter(valid)
-
-    # W1 deterministic dedup; losers quarantined
-    # (orders_bronze_to_silver.py:79-90).
-    order = [
-        F.col("order_purchase_ts").desc_nulls_last(),
-        F.col("_bronze_ingest_ts").desc_nulls_last(),
-        F.col("_bronze_source_file").desc_nulls_last(),
-        F.col("_bronze_run_id").desc_nulls_last(),
-    ]
-    deduped = dedup_top1(clean, ["order_id"], order)
-
     silver_out = (
-        deduped.withColumn("_silver_run_id", F.lit(run_id))
+        normalized.filter(valid)
+        .withColumn("_silver_run_id", F.lit(run_id))
         .withColumn("_silver_ts", F.current_timestamp())
         .withColumn("_schema_version", F.lit(_contract("silver_orders").contract_hash))
     )
 
     blocked = None
     try:
+        # W1 deterministic dedup (orders_bronze_to_silver.py:79-90)
+        # ranks inside the merge's own per-key window: one exchange on
+        # order_id; the gates see the winners only
         commit = ManagedTable(spark, silver_path, keys=["order_id"]).merge(
-            silver_out, checks=_SILVER_DQ_CHECKS
+            silver_out, checks=_SILVER_DQ_CHECKS, order_by=_w1_order()
         )
-    except MergeBlocked as exc:  # the staged write ran: counts are in
+    except MergeBlocked as exc:  # the staged write ran: the gates are in
         blocked = exc
-    counts = split.get
-    n_invalid = counts["rows"] - counts["valid"]
-    if n_invalid:
-        normalized.filter(~valid).write.mode("overwrite").parquet(
-            f"{quarantine_dir}/preclean_invalid"
-        )
+    # The preclean split is counted where no shuffle sits below the
+    # observation: the valid rows by the merge (its numSourceRows), the
+    # invalid ones by their quarantine write, run every time so a clean
+    # batch also replaces the last run's quarantine. (Observed below the
+    # merge's exchange, the counts would vanish whenever AQE drops that
+    # exchange's stage as empty — a first publish of invalid rows only.)
+    invalid = Observation()
+    normalized.filter(~valid).observe(invalid, F.count(F.lit(1)).alias("n")).write.mode(
+        "overwrite"
+    ).parquet(f"{quarantine_dir}/preclean_invalid")
+    n_invalid = invalid.get["n"]
     if blocked is not None:
         # failure path only: a check pass of its own for the samples
-        run_checks(silver_out, _SILVER_DQ_CHECKS, quarantine_dir=quarantine_dir)
+        run_checks(
+            dedup_top1(silver_out, ["order_id"], _w1_order()),
+            _SILVER_DQ_CHECKS,
+            quarantine_dir=quarantine_dir,
+        )
         normalized.unpersist()
         raise DQGateFailure(
             "critical DQ failures: "
@@ -270,7 +292,7 @@ def silver_publish(
     normalized.unpersist()
     report = commit.report
     n_dedup = report.row_count
-    n_rejected_dups = counts["valid"] - n_dedup
+    n_rejected_dups = commit.metrics["numSourceRows"] - n_dedup
     log_event(
         "silver_published", run_id,
         rows=n_dedup, invalid=n_invalid, duplicate_rejects=n_rejected_dups,

@@ -13,18 +13,18 @@ Semantics preserved exactly (the #1 correctness risk per SURVEY §7.4):
   ``order_date ∈ [as_of - 29, as_of]``;
 - the label window is half-open ``(as_of, as_of + horizon]``;
 - single-order customers get ``avg_days_between_orders = 0.0`` (not
-  NULL), via the left-join + fillna path;
+  NULL), as the reference's left-join + fillna path gives;
 - label eligibility requires the horizon to be fully observable:
   ``as_of + horizon <= max(order_date)`` over the whole dataset.
 
-Scale posture (100 TB): each sub-aggregate reduces to one row per
-customer BEFORE any join, so the joins are between already-aggregated
-frames of |customers| rows — the only wide shuffles are the per-key
-hash aggregations, which Spark executes with map-side partial
-aggregation. All sub-frames share ``customer_id`` as the shuffle key,
-so AQE can reuse one exchange partitioning across the join chain. The
-point-in-time cut is a literal predicate applied directly to the scan
-(parquet row-group stats + partition pruning apply).
+Scale posture (100 TB): every feature is computed inside ONE hash
+exchange on ``customer_id``: a window over ``(customer_id, order_id)``
+marks each order's newest row (the partitioning already satisfies it,
+so it only sorts) and one aggregation takes every feature. The
+exchange moves the point-in-time order rows, about what the distinct
+counts' Expand moved before, and there is no join and no second
+shuffle. The point-in-time cut is a literal predicate applied directly
+to the scan (parquet row-group stats + partition pruning apply).
 """
 
 from __future__ import annotations
@@ -54,57 +54,55 @@ def customer_features(orders: DataFrame, as_of_date: str | dt.date) -> DataFrame
         avg_days_between_orders double
 
     Mirrors ``customer_features_daily.py:110-212`` (A1/A2/A3 + W3 +
-    J1/J2 + fillna in SURVEY §2 terms).
+    J1/J2 + fillna in SURVEY §2 terms) with the same values, computed
+    inside one exchange on ``customer_id``:
+
+    - distinct order counts: the newest row of each
+      ``(customer_id, order_id)`` (a window the ``customer_id`` hash
+      partitioning already satisfies) stands for its order, so
+      ``count_distinct(order_id)`` over a trailing window is a count of
+      those rows in it — an order counts if any of its rows does;
+    - mean gap: the W3 lag gaps over ``(order_date, order_id)``
+      telescope, so their mean is ``(last - first) / (rows - 1)`` — the
+      same double division ``avg`` ends in (integer-valued sums are
+      exact), with 0.0 for single-order customers as the reference's
+      left join + fillna gives.
     """
     as_of = _as_of_lit(as_of_date)
-    base = orders.select("customer_id", "order_id", "order_date").filter(
-        F.col("order_date") <= as_of
+    newest = Window.partitionBy("customer_id", "order_id").orderBy(
+        F.col("order_date").desc()
+    )
+    base = (
+        orders.select("customer_id", "order_id", "order_date")
+        .filter(F.col("order_date") <= as_of)
+        .repartition("customer_id")
+        .withColumn(
+            "_newest",
+            F.col("order_id").isNotNull() & (F.row_number().over(newest) == 1),
+        )
     )
 
-    # A1 + A2 fused: lifetime stats AND the trailing-window distinct
-    # counts in ONE aggregation over ONE scan. The reference runs three
-    # separate scan→groupBy→join passes (customer_features_daily.py:
-    # 132-148,177-187); conditional count_distinct gives identical
-    # values ([as_of-29, as_of] inclusive both ends is the "30d"
-    # policy, ARCHITECTURE.md:143-149) while cutting 2 scans and 2
-    # joins — at 100 TB that is the difference between reading the
-    # fact table once and three times.
-    stats = base.groupBy("customer_id").agg(
+    def orders_since(days: int):
+        return F.count_if(
+            F.col("_newest") & (F.col("order_date") >= F.date_sub(as_of, days - 1))
+        )
+
+    feats = base.groupBy("customer_id").agg(
         F.max("order_date").alias("last_order_date"),
         F.min("order_date").alias("first_order_date"),
-        F.count_distinct("order_id").alias("lifetime_orders"),
-        F.count_distinct(
-            F.when(F.col("order_date") >= F.date_sub(as_of, 29), F.col("order_id"))
-        ).alias("orders_30d"),
-        F.count_distinct(
-            F.when(F.col("order_date") >= F.date_sub(as_of, 89), F.col("order_id"))
-        ).alias("orders_90d"),
+        F.count_if("_newest").alias("lifetime_orders"),
+        orders_since(30).alias("orders_30d"),
+        orders_since(90).alias("orders_90d"),
+        F.count(F.lit(1)).alias("_rows"),
     )
-
-    # W3 + A3 — inter-order gaps via lag ordered by (order_date,
-    # order_id) per customer, then mean gap (customer_features_daily.py:150-174).
-    w = Window.partitionBy("customer_id").orderBy("order_date", "order_id")
-    gaps = (
-        base.withColumn("_prev_order_date", F.lag("order_date").over(w))
-        .withColumn(
-            "gap_days",
-            F.when(
-                F.col("_prev_order_date").isNotNull(),
-                F.datediff(F.col("order_date"), F.col("_prev_order_date")),
-            ),
-        )
-        .filter(F.col("gap_days").isNotNull())
-        .groupBy("customer_id")
-        .agg(F.avg(F.col("gap_days").cast("double")).alias("avg_days_between_orders"))
-    )
-
-    # J2 — left-join the gap frame (the only remaining join); missing →
-    # 0.0 (single-order customers, customer_features_daily.py:181-187).
-    # Both sides are hash-partitioned on customer_id, so the join
-    # reuses the aggregation exchange instead of adding a shuffle.
-    feats = stats.join(gaps, on="customer_id", how="left").fillna(
-        {"avg_days_between_orders": 0.0}
-    )
+    # the reference's gap join is on customer_id, which a NULL key
+    # never matches: such a group gets the fillna 0.0
+    has_gaps = F.col("customer_id").isNotNull() & (F.col("_rows") > 1)
+    avg_gap = F.when(
+        has_gaps,
+        F.datediff(F.col("last_order_date"), F.col("first_order_date")).cast("double")
+        / (F.col("_rows") - 1).cast("double"),
+    ).otherwise(F.lit(0.0))
 
     return feats.select(
         "customer_id",
@@ -113,7 +111,7 @@ def customer_features(orders: DataFrame, as_of_date: str | dt.date) -> DataFrame
         F.col("orders_90d").cast("long").alias("orders_90d"),
         F.col("lifetime_orders").cast("long").alias("lifetime_orders"),
         F.datediff(as_of, F.col("first_order_date")).alias("customer_tenure_days"),
-        F.round(F.col("avg_days_between_orders"), 6).alias("avg_days_between_orders"),
+        F.round(avg_gap, 6).alias("avg_days_between_orders"),
     )
 
 

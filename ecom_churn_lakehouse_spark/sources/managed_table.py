@@ -10,7 +10,10 @@ the semantics over plain parquet:
 - ``merge`` = source-wins upsert: new table = source ∪ (current
   ⟕anti source on keys). Equivalent to Delta's
   ``whenMatchedUpdateAll().whenNotMatchedInsertAll()`` for sources
-  that are unique per key (enforced).
+  that are unique per key (enforced). ``merge(order_by=)`` takes a
+  source that repeats keys: the first row per key under ``order_by``
+  is the upsert, ranked inside the merge's own per-key window, so a
+  W1 dedup costs no shuffle of its own.
 - Every write is ONE Spark action: the staged snapshot write. What the
   caller needs to know rides that action as a ``df.observe``: source,
   upsert and tombstone rows, matched (updated / deleted) target rows,
@@ -21,6 +24,13 @@ the semantics over plain parquet:
   ``operationMetrics`` (rows from the observation and the parquet
   footers, files and bytes from the add actions), returned to the
   caller as a :class:`Commit` and listed by ``history()``.
+- ``append`` is add-only, as in Delta: it stages only the incoming
+  rows and hard-links the base snapshot's data files into the new
+  snapshot dir under the same relative paths, so every snapshot stays a
+  self-contained dir for ``read()``, time travel and the vacuum while
+  no existing row is rewritten. ``append(txn_id=)`` records a Delta
+  ``txn`` action, so a writer can make ingestion idempotent from the
+  table's own log (``transactions()``).
 - Each snapshot records its scan schema (``_schema.json``) when it is
   staged, so reads and the delta-log mirror never run a
   schema-inference job.
@@ -50,7 +60,7 @@ import uuid
 from dataclasses import dataclass
 from typing import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.window import Window
@@ -61,6 +71,7 @@ from ecom_churn_lakehouse_spark.dq.checks import (
     report_from_metrics,
     run_checks,
 )
+from ecom_churn_lakehouse_spark.operators.windows import dedup_top1
 from ecom_churn_lakehouse_spark.session import HAVE_DELTA
 
 __all__ = ["Commit", "ManagedTable", "MergeBlocked"]
@@ -120,6 +131,16 @@ def _scan_schema(df: DataFrame, partition_by: list[str] | None) -> T.StructType:
     fields = [f for f in df.schema.fields if f.name not in parts]
     fields += [T.StructField(c, df.schema[c].dataType) for c in partition_by or []]
     return _nullable(T.StructType(fields))
+
+
+def _data_files(snapshot: str) -> list[str]:
+    """The data files of a snapshot dir, relative to it, sorted."""
+    return sorted(
+        os.path.relpath(os.path.join(root, f), snapshot)
+        for root, _, files in os.walk(snapshot)
+        for f in files
+        if f.endswith(".parquet")
+    )
 
 
 class ManagedTable:
@@ -403,6 +424,7 @@ class ManagedTable:
         claim_seq: int,
         partition_by: list[str] | None = None,
         commit_info: dict | None = None,
+        txn_id: str | None = None,
     ) -> bool:
         """CAS: claim ``claim_seq`` by hard-linking a fully-written
         temp file into the commit log (``os.link`` fails-if-exists —
@@ -414,7 +436,8 @@ class ManagedTable:
         rename and claim leaves only an unclaimed orphan dir that the
         next vacuum collects. On conflict the rename is undone and
         False is returned. ``commit_info`` (operation, parameters,
-        metrics) goes into the delta-log mirror's commitInfo."""
+        metrics) goes into the delta-log mirror's commitInfo, and
+        ``txn_id`` into a ``txn`` action beside it."""
         os.makedirs(self.path, exist_ok=True)
         cdir = os.path.join(self.path, _COMMITS)
         os.makedirs(cdir, exist_ok=True)
@@ -434,7 +457,7 @@ class ManagedTable:
             return False
         finally:
             os.remove(tmp)
-        self._write_delta_log(claim_seq, versioned, partition_by, commit_info)
+        self._write_delta_log(claim_seq, versioned, partition_by, commit_info, txn_id)
         self._swap_head(version)
         return True
 
@@ -457,26 +480,20 @@ class ManagedTable:
         (paths relative to the TABLE root, partitionValues parsed from
         hive-style path segments)."""
         adds = []
-        for root, _, files in os.walk(versioned):
-            for f in sorted(files):
-                if not f.endswith(".parquet"):
-                    continue
-                full = os.path.join(root, f)
-                rel = os.path.relpath(full, self.path)
-                pvals = {
-                    seg.split("=", 1)[0]: seg.split("=", 1)[1]
-                    for seg in os.path.relpath(root, versioned).split(os.sep)
-                    if "=" in seg
+        for rel in _data_files(versioned):
+            full = os.path.join(versioned, rel)
+            pvals = dict(
+                seg.split("=", 1) for seg in os.path.dirname(rel).split(os.sep) if "=" in seg
+            )
+            adds.append(
+                {
+                    "path": os.path.relpath(full, self.path),
+                    "partitionValues": pvals,
+                    "size": os.path.getsize(full),
+                    "modificationTime": int(os.path.getmtime(full) * 1000),
+                    "dataChange": True,
                 }
-                adds.append(
-                    {
-                        "path": rel,
-                        "partitionValues": pvals,
-                        "size": os.path.getsize(full),
-                        "modificationTime": int(os.path.getmtime(full) * 1000),
-                        "dataChange": True,
-                    }
-                )
+            )
         return adds
 
     def delta_log_state(
@@ -495,11 +512,29 @@ class ManagedTable:
         checkpoint some other writer left behind). Pass explicitly to
         override either way.
         """
+        meta, active, _ = self._log_state(upto_version, use_checkpoint)
+        return meta, active
+
+    def transactions(self) -> dict[str, dict]:
+        """Delta ``txn`` actions in the log, by ``appId`` (the
+        ``txn_id`` an append recorded): the checkpoint's ``txn`` rows
+        plus the JSON commits after it. A writer that keys its txn id by
+        its input makes a replay detectable from the table itself."""
+        return self._log_state()[2]
+
+    def _log_state(
+        self,
+        upto_version: int | None = None,
+        use_checkpoint: bool | None = None,
+    ) -> tuple[dict | None, dict[str, dict], dict[str, dict]]:
+        """Log replay → (last metaData, active adds by path, txn actions
+        by appId); see :meth:`delta_log_state`."""
         ldir = os.path.join(self.path, "_delta_log")
         meta: dict | None = None
         active: dict[str, dict] = {}
+        txns: dict[str, dict] = {}
         if not os.path.isdir(ldir):
-            return meta, active
+            return meta, active, txns
         if use_checkpoint is None:
             use_checkpoint = self.checkpoint_interval > 0
         # Delta checkpointing: start replay from the newest checkpoint
@@ -516,7 +551,7 @@ class ManagedTable:
                     ) and v > ckpt_v:
                         ckpt_v = v
         if ckpt_v >= 0:
-            meta, active = self._read_checkpoint(ckpt_v)
+            meta, active, txns = self._read_checkpoint(ckpt_v)
         for fn in sorted(os.listdir(ldir)):
             if not fn.endswith(".json") or fn == _LAST_CKPT:
                 continue
@@ -536,7 +571,9 @@ class ManagedTable:
                         active[action["add"]["path"]] = action["add"]
                     elif "remove" in action:
                         active.pop(action["remove"]["path"], None)
-        return meta, active
+                    elif "txn" in action:
+                        txns[action["txn"]["appId"]] = action["txn"]
+        return meta, active, txns
 
     def read_via_delta_log(self, upto_version: int | None = None) -> DataFrame:
         """Read the table THROUGH the Delta transaction log — resolve
@@ -609,15 +646,21 @@ class ManagedTable:
         versioned: str,
         partition_by: list[str] | None,
         commit_info: dict | None = None,
+        txn_id: str | None = None,
     ) -> None:
         """Emit the Delta-protocol action file for commit ``version``.
 
-        Our emulation rewrites the full snapshot per commit, so every
-        commit is remove(all previous active files) + add(all new) —
-        the same shape delta-spark writes for an overwrite txn; the
-        MERGE semantics live in how the new snapshot was BUILT, and
-        the commitInfo names the operation that built it. The
-        metaData schema is the one recorded at staging (no Spark job).
+        Each commit publishes a new self-contained snapshot dir, so
+        every commit is remove(all previous active files) + add(all
+        files of the new dir) — the same shape delta-spark writes for
+        an overwrite txn. An append's dir holds hard links to the base
+        snapshot's files plus the new rows' files; the links are listed
+        as adds under their new paths, like every other file. The MERGE
+        / APPEND semantics live in how the new snapshot was BUILT, and
+        the commitInfo names the operation that built it. ``txn_id``
+        adds a ``txn`` action (appId = ``txn_id``, version = this
+        commit). The metaData schema is the one recorded at staging (no
+        Spark job).
         """
         ldir = os.path.join(self.path, "_delta_log")
         os.makedirs(ldir, exist_ok=True)
@@ -675,6 +718,10 @@ class ManagedTable:
                     }
                 }
             )
+        if txn_id is not None:
+            actions.append(
+                {"txn": {"appId": txn_id, "version": version, "lastUpdated": now_ms}}
+            )
         for path in sorted(prev_active):
             actions.append(
                 {
@@ -712,10 +759,10 @@ class ManagedTable:
 
     # Delta checkpoint parquet schema: one action per row, exactly one
     # of the struct columns non-null — the protocol's checkpoint file
-    # shape (partitionValues as map<string,string>). The remove/txn
-    # columns are always all-null in our snapshots (a checkpoint only
-    # carries LIVE state; removes matter for incremental readers and
-    # txn for idempotent streaming writers), but strict Delta clients
+    # shape (partitionValues as map<string,string>). The remove column
+    # is always all-null in our snapshots (a checkpoint only carries
+    # LIVE state; removes matter for incremental readers); txn rows
+    # carry the appends' transaction ids. Strict Delta clients
     # (delta-rs, delta-spark) expect the columns to exist and the
     # metaData struct to carry format/name/description/configuration —
     # r9 ADVICE #1.
@@ -811,7 +858,7 @@ class ManagedTable:
         import pyarrow.parquet as pq
 
         ldir = os.path.join(self.path, "_delta_log")
-        meta, active = self.delta_log_state(version)
+        meta, active, txns = self._log_state(version)
         nulls = {"add": None, "remove": None, "txn": None}
         fmt = meta.get("format") or {"provider": "parquet", "options": {}}
         rows = [
@@ -860,6 +907,8 @@ class ManagedTable:
                     },
                 }
             )
+        for app_id in sorted(txns):
+            rows.append({"protocol": None, "metaData": None, **nulls, "txn": txns[app_id]})
         table = pa.Table.from_pylist(rows, schema=self._ckpt_schema())
         tmp = os.path.join(ldir, f".tmp-ckpt-{uuid.uuid4().hex[:8]}")
         pq.write_table(table, tmp)
@@ -890,9 +939,10 @@ class ManagedTable:
 
     def _read_checkpoint(
         self, version: int
-    ) -> tuple[dict | None, dict[str, dict]]:
-        """Load a checkpoint parquet back into (metaData, active adds)
-        — the reader half of the protocol's checkpoint fast path."""
+    ) -> tuple[dict | None, dict[str, dict], dict[str, dict]]:
+        """Load a checkpoint parquet back into (metaData, active adds,
+        txns by appId) — the reader half of the protocol's checkpoint
+        fast path."""
         import pyarrow.parquet as pq
 
         ldir = os.path.join(self.path, "_delta_log")
@@ -901,6 +951,7 @@ class ManagedTable:
         )
         meta: dict | None = None
         active: dict[str, dict] = {}
+        txns: dict[str, dict] = {}
         for row in table.to_pylist():
             if row.get("metaData") is not None:
                 m = row["metaData"]
@@ -932,7 +983,9 @@ class ManagedTable:
                     "modificationTime": a["modificationTime"],
                     "dataChange": a["dataChange"],
                 }
-        return meta, active
+            elif row.get("txn") is not None:
+                txns[row["txn"]["appId"]] = row["txn"]
+        return meta, active, txns
 
     def last_checkpoint(self) -> dict | None:
         """Contents of ``_last_checkpoint`` (or None before the first
@@ -951,12 +1004,7 @@ class ManagedTable:
         footers, read in this process (no Spark job)."""
         import pyarrow.parquet as pq
 
-        files = [
-            os.path.join(root, f)
-            for root, _, names in os.walk(snapshot)
-            for f in names
-            if f.endswith(".parquet")
-        ]
+        files = [os.path.join(snapshot, f) for f in _data_files(snapshot)]
         return {
             "numFiles": len(files),
             "numOutputBytes": sum(os.path.getsize(f) for f in files),
@@ -971,6 +1019,7 @@ class ManagedTable:
         partition_by: list[str] | None = None,
         base_dependent: bool = True,
         max_retries: int = 8,
+        txn_id: str | None = None,
     ) -> Commit:
         """Optimistic-concurrency publish loop: stage ``build()``,
         CAS-claim the next seq, and on conflict re-read + re-apply
@@ -978,11 +1027,13 @@ class ManagedTable:
         must be recomputed against the winner's snapshot) or just
         re-claim (``base_dependent=False``, blind overwrite).
 
-        ``build()`` returns ``(frame, verdict)``. ``verdict()`` runs
-        after the staged write and before the claim: it returns the
-        observed ``(metrics, report)`` or raises, which abandons the
-        staged dir unpublished. Every restaged attempt calls
-        ``build()`` again, so each gets a fresh ``Observation``."""
+        ``build()`` returns ``(frame, finish)``. ``finish(staged)`` runs
+        after the staged write and before the claim: it completes the
+        staged dir (an append carries the base snapshot's files in) and
+        returns the observed ``(metrics, report)``, or raises — a
+        failed verdict — which abandons the staged dir unpublished.
+        Every restaged attempt calls ``build()`` again, so each gets a
+        fresh ``Observation``."""
         staged: str | None = None
         try:
             for _ in range(max_retries + 1):
@@ -995,9 +1046,9 @@ class ManagedTable:
                     if staged is not None:
                         self._abandon_staged(staged)
                         staged = None
-                    frame, verdict = build()
+                    frame, finish = build()
                     staged = self._stage(frame, partition_by)
-                    observed, report = verdict()
+                    observed, report = finish(staged)
                     metrics = {**observed, **self._file_metrics(staged)}
                     # a commit that landed while we were staging makes
                     # our frame stale — claim only our read's successor
@@ -1006,7 +1057,7 @@ class ManagedTable:
                     "operationParameters": parameters,
                     "operationMetrics": metrics,
                 }
-                if self._try_publish(staged, base_seq + 1, partition_by, info):
+                if self._try_publish(staged, base_seq + 1, partition_by, info, txn_id):
                     staged = None
                     return Commit(base_seq + 1, operation, metrics, report)
         finally:
@@ -1048,7 +1099,7 @@ class ManagedTable:
             w.save(self.path)
             return self._delta_commit()
         return self._occ_publish(
-            lambda: (df, lambda: ({}, None)),
+            lambda: (df, lambda staged: ({}, None)),
             "WRITE",
             self._write_params("Overwrite", partition_by),
             partition_by,
@@ -1060,41 +1111,104 @@ class ManagedTable:
         df: DataFrame,
         partition_by: list[str] | None = None,
         evolve_schema: bool = False,
+        txn_id: str | None = None,
     ) -> Commit:
-        """S4/S5 append-only sink (bronze, audit log); operation APPEND,
-        with ``numSourceRows`` = the rows of ``df``, observed during the
-        write.
+        """S4/S5 append-only sink (bronze, audit log); operation APPEND.
 
+        Add-only, as a Delta append: the one Spark action writes only
+        ``df``'s rows, then the base snapshot's data files are
+        hard-linked into the staged dir under the same relative paths,
+        so the new snapshot is self-contained (``read()``, time travel
+        and the vacuum see a whole table) and no existing row is
+        rewritten. ``numSourceRows`` is the rows of ``df``, observed
+        during the write; ``numOutputRows`` / ``numFiles`` /
+        ``numOutputBytes`` describe the whole published snapshot.
+
+        Incoming columns are written in the table's order and cast to
+        its types, so the new files read under the recorded schema.
         ``evolve_schema=True`` widens the table to the union of the
-        current and incoming columns (new columns backfill NULL for
-        existing rows — Delta ``mergeSchema`` semantics); without it a
-        column mismatch fails loudly, which is the contract-enforcing
-        default for pipeline sinks.
+        current and incoming columns (old files lack the new columns and
+        read them as NULL — Delta ``mergeSchema`` semantics); without it
+        a column mismatch fails loudly, which is the contract-enforcing
+        default for pipeline sinks. An append keeps the table's
+        partition columns; changing them takes an overwrite.
+
+        ``txn_id`` records a Delta ``txn`` action (appId = ``txn_id``)
+        in this commit, listed by :meth:`transactions`: a writer that
+        keys it by its input can skip a replay from the log alone.
         """
         if HAVE_DELTA:
             w = df.write.format("delta").mode("append")
             if evolve_schema:
                 w = w.option("mergeSchema", "true")
+            if txn_id is not None:
+                w = w.option("txnAppId", txn_id).option("txnVersion", 0)
             if partition_by:
                 w = w.partitionBy(*partition_by)
             w.save(self.path)
             return self._delta_commit()
 
         def build():
-            obs = Observation()
-            incoming = df.observe(obs, F.count(F.lit(1)).alias("numSourceRows"))
-            current = self._read_base()
-            if current is not None:
-                incoming = current.unionByName(
-                    incoming, allowMissingColumns=evolve_schema
-                )
-            return incoming, lambda: (
-                {"numSourceRows": int(obs.get["numSourceRows"])},
-                None,
+            base = self._committed_dir()
+            incoming = df if base is None else self._conform(
+                df, base, partition_by, evolve_schema
             )
+            obs = Observation()
+            observed = incoming.observe(obs, F.count(F.lit(1)).alias("numSourceRows"))
+
+            def finish(staged: str):
+                if base is not None:
+                    for rel in _data_files(base):
+                        dst = os.path.join(staged, rel)
+                        os.makedirs(os.path.dirname(dst), exist_ok=True)
+                        os.link(os.path.join(base, rel), dst)
+                return {"numSourceRows": int(obs.get["numSourceRows"])}, None
+
+            return observed, finish
 
         return self._occ_publish(
-            build, "APPEND", self._write_params("Append", partition_by), partition_by
+            build,
+            "APPEND",
+            self._write_params("Append", partition_by),
+            partition_by,
+            txn_id=txn_id,
+        )
+
+    def _conform(
+        self,
+        df: DataFrame,
+        base: str,
+        partition_by: list[str] | None,
+        evolve_schema: bool,
+    ) -> DataFrame:
+        """``df`` laid out to sit beside ``base``'s files: the table's
+        columns in its order and types, then any new columns
+        (``evolve_schema``), with the same partition columns."""
+        files = _data_files(base)
+        if files:
+            dirs = os.path.dirname(files[0]).split(os.sep)
+            layout = [seg.split("=", 1)[0] for seg in dirs if "=" in seg]
+            if layout != list(partition_by or []):
+                raise ValueError(
+                    f"append to {self.path} must keep its partition columns "
+                    f"{layout}; got {list(partition_by or [])}"
+                )
+        current = self._recorded_schema(base) or self.spark.read.parquet(base).schema
+        missing = [c for c in current.names if c not in df.columns]
+        extra = [c for c in df.columns if c not in current.names]
+        if (missing or extra) and not evolve_schema:
+            raise ValueError(
+                f"append columns differ from the table's: missing {missing}, "
+                f"extra {extra}; pass evolve_schema=True to widen the table"
+            )
+        return df.select(
+            *[
+                (F.col(f.name) if f.name in df.columns else F.lit(None))
+                .cast(f.dataType)
+                .alias(f.name)
+                for f in current.fields
+            ],
+            *extra,
         )
 
     def _validate_checks(self, checks: list[dict]) -> None:
@@ -1128,12 +1242,19 @@ class ManagedTable:
         delete_col: str | None = None,
         evolve_schema: bool = False,
         checks: list[dict] | None = None,
+        order_by: list[Column] | None = None,
     ) -> Commit:
         """S7 keyed upsert: update-all when matched, insert-all otherwise.
 
-        Requires ``source`` unique per key (the reference guarantees
-        this upstream via W1 dedup / snapshot grain; we enforce it —
-        a non-unique source makes MERGE nondeterministic).
+        Without ``order_by``, requires ``source`` unique per key (the
+        reference guarantees this upstream via W1 dedup / snapshot
+        grain; we enforce it — a non-unique source makes MERGE
+        nondeterministic). With ``order_by``, the first source row per
+        key under that order is the key's upsert (W1 dedup folded into
+        the merge): the other rows count in ``numSourceRows`` and
+        nowhere else — gates, the duplicate-key verdict and the
+        published snapshot see the winners only. ``order_by`` may use
+        the source's data columns, not ``delete_col``.
 
         ``delete_col`` names a boolean column in ``source`` marking CDC
         tombstones: matched target rows are DELETED instead of updated,
@@ -1150,7 +1271,8 @@ class ManagedTable:
         source).
 
         One Spark action: current ∪ source is shuffled once on the
-        keys, a window over each key decides which rows survive, and
+        keys, a window over each key ranks the source rows
+        (``order_by``) and decides which rows survive, and
         one ``df.observe`` on that frame counts source, upsert and
         tombstone rows, matched target rows, duplicated keys and every
         gate. The verdict runs on those counts after the staged write
@@ -1160,11 +1282,13 @@ class ManagedTable:
         nothing is published. Returns the :class:`Commit` (operation
         MERGE); ``commit.report.row_count`` is the upserted rows.
 
-        With delta-spark the gates run as their own pass first
-        (gate-then-MERGE): observation across the MERGE command is not
-        guaranteed there.
+        With delta-spark the source is deduplicated first
+        (``dedup_top1`` on ``order_by``) and the gates run as their own
+        pass (gate-then-MERGE): observation across the MERGE command is
+        not guaranteed there.
         """
         checks = list(checks or [])
+        order_by = list(order_by or [])
         self._validate_checks(checks)
         keys = self.keys
         upsert = (
@@ -1174,6 +1298,8 @@ class ManagedTable:
         )
         data_cols = [c for c in source.columns if c != delete_col]
         if HAVE_DELTA:
+            if order_by:
+                source = dedup_top1(source, keys, order_by)
             dup = (
                 source.groupBy(*keys).count().filter(F.col("count") > 1).count()
             )
@@ -1213,6 +1339,11 @@ class ManagedTable:
 
         is_src, up = F.col("__mt_src"), F.col("__mt_up")
         n_src, hit = F.col("__mt_nsrc"), F.col("__mt_hit")
+        # ``won``: the source row that speaks for its key — the first
+        # under ``order_by``, else every source row (a repeat is refused)
+        won = F.col("__mt_won") if order_by else F.lit(True)
+        upserted = is_src & up & won
+        repeated = F.lit(False) if order_by else is_src & (n_src > 1)
         keyed = F.lit(True)
         for k in keys:
             keyed = keyed & F.col(k).isNotNull()
@@ -1243,23 +1374,29 @@ class ManagedTable:
                     F.lit(False).alias("__mt_src"),
                 ).unionByName(tagged, allowMissingColumns=evolve_schema)
             w = Window.partitionBy(*keys)
+            if order_by:
+                # source rows first, in order; one sort inside the same
+                # per-key exchange
+                ranked = w.orderBy(is_src.desc(), *order_by)
+                both = both.withColumn("__mt_won", F.row_number().over(ranked) == 1)
+                w = ranked.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
             both = both.withColumn(
                 "__mt_nsrc", F.sum(is_src.cast("int")).over(w)
-            ).withColumn("__mt_hit", F.max((is_src & up).cast("int")).over(w))
+            ).withColumn("__mt_hit", F.max(upserted.cast("int")).over(w))
             obs = Observation()
             observed = both.observe(
                 obs,
                 F.count_if(is_src).alias("numSourceRows"),
                 F.count_if(matched & (hit == 1)).alias("numTargetRowsUpdated"),
                 F.count_if(matched & (hit == 0)).alias("numTargetRowsDeleted"),
-                F.sum(F.when(is_src & (n_src > 1), 1.0 / n_src)).alias("__dups"),
-                *check_aggregates(checks, where=is_src & up),
+                F.sum(F.when(repeated, 1.0 / n_src)).alias("__dups"),
+                *check_aggregates(checks, where=upserted),
             )
-            frame = observed.filter((is_src & up) | (~is_src & ~matched)).drop(
-                "__mt_up", "__mt_src", "__mt_nsrc", "__mt_hit"
+            frame = observed.filter(upserted | (~is_src & ~matched)).drop(
+                "__mt_up", "__mt_src", "__mt_nsrc", "__mt_hit", "__mt_won"
             )
 
-            def verdict():
+            def verdict(staged: str):
                 m = obs.get
                 dup = round(m["__dups"] or 0)
                 report = report_from_metrics(m, checks, lambda spec: dup)
@@ -1326,12 +1463,7 @@ class ManagedTable:
             return None
         head = self._head_dir()
         if target_files is None:
-            total = sum(
-                os.path.getsize(os.path.join(root, f))
-                for root, _, files in os.walk(head)
-                for f in files
-                if f.endswith(".parquet")
-            )
+            total = sum(os.path.getsize(os.path.join(head, f)) for f in _data_files(head))
             target_files = max(1, math.ceil(total / target_file_bytes))
         def rewrite() -> DataFrame:
             # Re-read per OCC attempt: a data commit racing the
@@ -1364,7 +1496,7 @@ class ManagedTable:
         # the layout. Callers that need dir partitioning re-publish via
         # overwrite(partition_by=...).
         return self._occ_publish(
-            lambda: (rewrite(), lambda: ({}, None)),
+            lambda: (rewrite(), lambda staged: ({}, None)),
             "OPTIMIZE",
             {"zOrderBy": json.dumps(zorder_by or sort_by or [])},
         )

@@ -85,3 +85,94 @@ def test_training_snapshot_joins_eligible_only(spark):
     assert set(by_id) == {"cust_1", "cust_2"}
     assert by_id["cust_1"]["churn_label"] in (0, 1)
     assert by_id["cust_1"]["recency_days"] == 21
+
+
+def _reference_features(orders, as_of_date):
+    """The three-aggregation plan customer_features replaced: distinct
+    counts with count_distinct, mean gap from lag over (order_date,
+    order_id), left-joined and filled with 0.0."""
+    import pyspark.sql.functions as F
+    from pyspark.sql.window import Window
+
+    as_of = F.to_date(F.lit(as_of_date))
+    base = orders.select("customer_id", "order_id", "order_date").filter(
+        F.col("order_date") <= as_of
+    )
+    stats = base.groupBy("customer_id").agg(
+        F.max("order_date").alias("last_order_date"),
+        F.min("order_date").alias("first_order_date"),
+        F.count_distinct("order_id").alias("lifetime_orders"),
+        F.count_distinct(
+            F.when(F.col("order_date") >= F.date_sub(as_of, 29), F.col("order_id"))
+        ).alias("orders_30d"),
+        F.count_distinct(
+            F.when(F.col("order_date") >= F.date_sub(as_of, 89), F.col("order_id"))
+        ).alias("orders_90d"),
+    )
+    w = Window.partitionBy("customer_id").orderBy("order_date", "order_id")
+    gaps = (
+        base.withColumn("_prev", F.lag("order_date").over(w))
+        .withColumn(
+            "gap_days",
+            F.when(F.col("_prev").isNotNull(), F.datediff("order_date", "_prev")),
+        )
+        .filter(F.col("gap_days").isNotNull())
+        .groupBy("customer_id")
+        .agg(F.avg(F.col("gap_days").cast("double")).alias("avg_days_between_orders"))
+    )
+    feats = stats.join(gaps, on="customer_id", how="left").fillna(
+        {"avg_days_between_orders": 0.0}
+    )
+    return feats.select(
+        "customer_id",
+        F.datediff(as_of, F.col("last_order_date")).alias("recency_days"),
+        F.col("orders_30d").cast("long").alias("orders_30d"),
+        F.col("orders_90d").cast("long").alias("orders_90d"),
+        F.col("lifetime_orders").cast("long").alias("lifetime_orders"),
+        F.datediff(as_of, F.col("first_order_date")).alias("customer_tenure_days"),
+        F.round(F.col("avg_days_between_orders"), 6).alias("avg_days_between_orders"),
+    )
+
+
+def test_features_match_three_aggregation_reference(spark):
+    """customer_features (one exchange) equals the plan it replaced on
+    the cases its window/telescoping rewrite could get wrong."""
+    d = dt.date
+    rows = [
+        # an order id repeated on dates straddling the 30d (>= 03-02)
+        # and 90d (>= 01-01) bounds, plus an order exactly on as_of
+        ("a", "a1", d(2025, 3, 2)), ("a", "a1", d(2024, 12, 31)),
+        ("a", "a2", d(2025, 1, 1)), ("a", "a2", d(2025, 3, 1)),
+        ("a", "a3", d(2025, 3, 31)),
+        # null order ids
+        ("b", None, d(2025, 3, 10)), ("b", None, d(2025, 2, 1)), ("b", "b1", d(2025, 1, 15)),
+        ("g", None, d(2025, 3, 1)),
+        # same-day duplicates
+        ("c", "c1", d(2025, 3, 5)), ("c", "c1", d(2025, 3, 5)), ("c", "c2", d(2025, 3, 5)),
+        ("c", "c3", d(2025, 1, 20)),
+        # single-order customers, one with the order delivered twice
+        ("s", "s1", d(2025, 2, 20)),
+        ("t", "t1", d(2025, 3, 15)), ("t", "t1", d(2025, 3, 15)),
+        # every order after as_of; one also before a later as_of
+        ("f", "f1", d(2025, 4, 2)), ("f", "f2", d(2025, 5, 1)),
+        # a NULL customer
+        (None, "n1", d(2025, 2, 1)), (None, "n2", d(2025, 3, 1)),
+    ]
+    orders = spark.createDataFrame(
+        rows, "customer_id string, order_id string, order_date date"
+    )
+    for as_of in (AS_OF, "2025-04-15"):
+        got = sorted(customer_features(orders, as_of).collect(), key=str)
+        want = sorted(_reference_features(orders, as_of).collect(), key=str)
+        assert got == want, as_of
+        assert customer_features(orders, as_of).schema == _reference_features(orders, as_of).schema
+    feats = {r["customer_id"]: r for r in customer_features(orders, AS_OF).collect()}
+    assert "f" not in feats
+    assert feats["s"]["avg_days_between_orders"] == 0.0
+    assert feats["t"]["avg_days_between_orders"] == 0.0
+    assert (feats["a"]["orders_30d"], feats["a"]["orders_90d"], feats["a"]["lifetime_orders"]) == (
+        2, 3, 3
+    )
+    assert feats["b"]["lifetime_orders"] == 1 and feats["g"]["lifetime_orders"] == 0
+    assert feats["c"]["lifetime_orders"] == 3
+    assert feats[None]["avg_days_between_orders"] == 0.0

@@ -301,7 +301,10 @@ def test_retried_merge_observes_each_attempt_afresh(spark, tmp_path):
 
 def _same_schema_as_inference(spark, t, count_jobs):
     schema, jobs = count_jobs(lambda: t.read().schema)
-    assert schema == spark.read.parquet(t._head_dir()).schema
+    # every footer of the snapshot: after an evolving append its files
+    # carry different schemas, and plain inference reads just one
+    scanned = spark.read.option("mergeSchema", "true").parquet(t._head_dir())
+    assert schema == scanned.schema
     assert jobs == 0  # recorded at write time, not inferred
 
 
@@ -825,7 +828,7 @@ def test_checkpoint_time_travel_consistency(spark, tmp_path):
     got2 = {r["k"]: r["v"] for r in t.read_via_delta_log(2).collect()}
     assert got2 == {"a": 9, "b": 2}
     # target AT the checkpoint: both paths must agree exactly
-    meta_ck, active_ck = t._read_checkpoint(2)
+    meta_ck, active_ck, _ = t._read_checkpoint(2)
     meta_js, active_js = ManagedTable(
         spark, path, keys=["k"], checkpoint_interval=0
     ).delta_log_state(2)
@@ -864,7 +867,7 @@ def test_checkpoint_schema_has_full_delta_action_columns(spark, tmp_path):
     md = next(r["metaData"] for r in rows if r["metaData"] is not None)
     assert md["format"]["provider"] == "parquet"
     # and the round-trip reader uses the stored format, not a default
-    meta, active = t._read_checkpoint(2)
+    meta, active, _ = t._read_checkpoint(2)
     assert meta["format"] == {"provider": "parquet", "options": {}}
     assert meta["configuration"] == {}
     assert len(active) >= 1
@@ -988,14 +991,212 @@ def test_checkpoint_roundtrips_external_name_description(spark, tmp_path):
     # the external fields
     t = ManagedTable(spark, path, keys=["k"], checkpoint_interval=1)
     t.merge(spark.createDataFrame([Row(k="c", v=3)]))              # v2 ckpt
-    meta2, _ = t._read_checkpoint(2)
+    meta2, _, _ = t._read_checkpoint(2)
     assert meta2["name"] == "ext_orders"
     assert meta2["description"] == "set by external writer"
     # phase 3: checkpoint v3 is built FROM checkpoint-v2-recovered
     # state (delta_log_state reads through the checkpoint) — the
     # fields must survive the second generation too
     t.merge(spark.createDataFrame([Row(k="d", v=4)]))              # v3 ckpt
-    meta3, active3 = t._read_checkpoint(3)
+    meta3, active3, _ = t._read_checkpoint(3)
     assert meta3["name"] == "ext_orders"
     assert meta3["description"] == "set by external writer"
     assert len(active3) >= 1
+
+
+# ------------------------------------------- add-only appends and txns
+
+
+def _files(snapshot):
+    return {
+        os.path.relpath(os.path.join(root, f), snapshot)
+        for root, _, names in os.walk(snapshot)
+        for f in names
+        if f.endswith(".parquet")
+    }
+
+
+def test_append_links_base_files_and_writes_only_new_rows(spark, tmp_path):
+    """Each append carries its base snapshot's files by hard link (same
+    inode, same relative path) and writes files for its own rows only;
+    the oldest snapshot dir being vacuumed leaves the table whole, and
+    the retained previous snapshot still reads as it was."""
+    import pyarrow.parquet as pq
+
+    t = ManagedTable(spark, str(tmp_path / "t"), keys=["k"])
+    batch = lambda i: spark.range(2).select(  # noqa: E731
+        (F.col("id") + 10 * i).alias("k"),
+        F.to_date(F.lit(f"2025-01-0{1 + i % 2}")).alias("d"),
+    )
+    t.append(batch(0), partition_by=["d"])
+    for i in range(1, 4):
+        base = t._head_dir()
+        c = t.append(batch(i), partition_by=["d"])
+        head = t._head_dir()
+        carried, new = _files(base), _files(head) - _files(base)
+        assert carried <= _files(head)
+        for rel in carried:
+            assert os.stat(os.path.join(head, rel)).st_ino == os.stat(
+                os.path.join(base, rel)
+            ).st_ino
+        assert sum(pq.read_metadata(os.path.join(head, f)).num_rows for f in new) == 2
+        assert c.metrics["numSourceRows"] == 2
+        assert c.metrics["numOutputRows"] == 2 * (i + 1)
+    assert len(t.versions()) == 2  # the first snapshots were vacuumed
+    assert sorted(r["k"] for r in t.read().collect()) == [0, 1, 10, 11, 20, 21, 30, 31]
+    prev = t.read(t.versions()[0])
+    assert sorted(r["k"] for r in prev.collect()) == [0, 1, 10, 11, 20, 21]
+    assert t.read().columns == ["k", "d"]
+
+
+def test_append_evolves_partitioned_table_and_keeps_layout(spark, tmp_path):
+    t = ManagedTable(spark, str(tmp_path / "t"), keys=["k"])
+    t.append(spark.createDataFrame([(1, "x")], "k int, p string"), partition_by=["p"])
+    t.append(
+        spark.createDataFrame([("y", 2, 2.5)], "p string, k int, score double"),
+        partition_by=["p"],
+        evolve_schema=True,
+    )
+    assert t.read().columns == ["k", "score", "p"]
+    scanned = spark.read.option("mergeSchema", "true").parquet(t._head_dir())
+    assert t.read().schema == scanned.schema
+    assert {(r["k"], r["score"], r["p"]) for r in t.read().collect()} == {
+        (1, None, "x"),
+        (2, 2.5, "y"),
+    }
+    head = t._head_dir()
+    with pytest.raises(ValueError, match="evolve_schema"):
+        t.append(spark.createDataFrame([(3, "z")], "k int, p string"), partition_by=["p"])
+    with pytest.raises(ValueError, match="partition columns"):
+        t.append(spark.createDataFrame([(3, 1.0, "z")], "k int, score double, p string"))
+    assert t._head_dir() == head
+
+
+def test_append_txn_ids_are_read_from_checkpoint_and_json_tail(spark, tmp_path):
+    """``append(txn_id=)`` writes a Delta txn action; ``transactions()``
+    finds it in a checkpoint's txn rows and in the JSON commits after
+    it, also once the pre-checkpoint JSON files are gone."""
+    path = str(tmp_path / "t")
+    t = ManagedTable(spark, path, keys=["k"], checkpoint_interval=2)
+    for i, txn in enumerate(("fp-a", None, "fp-b", "fp-c")):  # v2 checkpoints
+        t.append(spark.createDataFrame([(i,)], "k int"), txn_id=txn)
+    assert set(t.transactions()) == {"fp-a", "fp-b", "fp-c"}
+    assert t.transactions()["fp-b"]["version"] == 2
+    ldir = os.path.join(path, "_delta_log")
+    for v in (0, 1, 2):
+        os.remove(os.path.join(ldir, f"{v:020d}.json"))
+    assert set(t.transactions()) == {"fp-a", "fp-b", "fp-c"}
+    assert sorted(r["k"] for r in t.read_via_delta_log().collect()) == [0, 1, 2, 3]
+
+
+# ------------------------------------------------- merge(order_by=...)
+
+
+def test_merge_order_by_picks_first_row_per_key(spark, tmp_path):
+    t = ManagedTable(spark, str(tmp_path / "t"), keys=["k"])
+    t.overwrite(spark.createDataFrame([("a", 0, 0), ("z", 0, 0)], "k string, v int, ts int"))
+    src = spark.createDataFrame(
+        [("a", 1, 1), ("a", 2, 3), ("a", 3, 2), ("b", 4, 1), ("b", 5, 2), ("c", 6, 1)],
+        "k string, v int, ts int",
+    )
+    c = t.merge(src, order_by=[F.col("ts").desc()])
+    assert {r["k"]: r["v"] for r in t.read().collect()} == {"a": 2, "b": 5, "c": 6, "z": 0}
+    assert c.metrics["numSourceRows"] == 6  # every source row, losers too
+    assert c.metrics["numTargetRowsUpdated"] == 1
+    assert c.metrics["numTargetRowsInserted"] == 2
+    assert c.report.row_count == 3
+    t.merge(src, order_by=[F.col("ts").asc()])
+    assert {r["k"]: r["v"] for r in t.read().collect()} == {"a": 1, "b": 4, "c": 6, "z": 0}
+
+
+def test_merge_order_by_gates_see_winners_only(spark, tmp_path):
+    from ecom_churn_lakehouse_spark.sources.managed_table import MergeBlocked
+
+    t = ManagedTable(spark, str(tmp_path / "t"), keys=["k"])
+    checks = [
+        {"name": "pk_unique", "type": "unique", "keys": ["k"]},
+        {"name": "v_not_null", "type": "not_null", "columns": ["v"]},
+    ]
+    # the losers repeat the key and carry a NULL v; only winners count
+    src = spark.createDataFrame(
+        [("a", 1, 2), ("a", None, 1), ("b", 2, 1), ("b", None, 0)], "k string, v int, ts int"
+    )
+    c = t.merge(src, checks=checks, order_by=[F.col("ts").desc()])
+    assert c.report.ok and c.report.row_count == 2
+    assert [(r.name, r.bad_rows) for r in c.report.results] == [("pk_unique", 0), ("v_not_null", 0)]
+    assert c.metrics["numSourceRows"] == 4
+    # a NULL winner fails its gate and publishes nothing
+    head, versions = t._head_dir(), t.versions()
+    with pytest.raises(MergeBlocked, match="v_not_null") as blocked:
+        t.merge(src, checks=checks, order_by=[F.col("ts").asc()])
+    assert blocked.value.report.row_count == 2
+    # without order_by a repeated key is refused, HEAD untouched
+    with pytest.raises(MergeBlocked, match="not unique"):
+        t.merge(src, checks=checks)
+    assert t._head_dir() == head and t.versions() == versions
+
+
+def test_merge_order_by_with_delta_dedups_then_merges(spark, tmp_path, monkeypatch):
+    """The delta-spark backend deduplicates with ``dedup_top1`` on the
+    order, gates the winners, then runs MERGE on them (a stand-in
+    DeltaTable records the MERGE source; no delta-spark here)."""
+    import sys
+    import types
+
+    import ecom_churn_lakehouse_spark.sources.managed_table as mt
+
+    calls = []
+
+    class FakeMerge:
+        def __init__(self, source):
+            calls.append(("merge", sorted(tuple(r) for r in source.collect())))
+
+        def whenMatchedUpdateAll(self):
+            return self
+
+        def whenNotMatchedInsertAll(self):
+            return self
+
+        def execute(self):
+            calls.append(("execute",))
+
+    class FakeDeltaTable:
+        @staticmethod
+        def isDeltaTable(spark, path):
+            return True
+
+        @staticmethod
+        def forPath(spark, path):
+            return FakeDeltaTable()
+
+        def alias(self, name):
+            return self
+
+        def merge(self, source, cond):
+            return FakeMerge(source)
+
+    def dedup(df, keys, order_by):
+        calls.append(("dedup_top1", keys))
+        return mt_dedup(df, keys, order_by)
+
+    mt_dedup = mt.dedup_top1
+    monkeypatch.setitem(sys.modules, "delta", types.ModuleType("delta"))
+    monkeypatch.setitem(
+        sys.modules, "delta.tables", types.SimpleNamespace(DeltaTable=FakeDeltaTable)
+    )
+    monkeypatch.setattr(mt, "HAVE_DELTA", True)
+    monkeypatch.setattr(mt, "dedup_top1", dedup)
+    t = ManagedTable(spark, str(tmp_path / "t"), keys=["k"])
+    monkeypatch.setattr(t, "_delta_commit", lambda report=None: mt.Commit(1, "MERGE", {}, report))
+    src = spark.createDataFrame([("a", 1, 1), ("a", 2, 2), ("b", 3, 1)], "k string, v int, ts int")
+    c = t.merge(
+        src,
+        checks=[{"name": "pk_unique", "type": "unique", "keys": ["k"]}],
+        order_by=[F.col("ts").desc()],
+    )
+    assert calls == [
+        ("dedup_top1", ["k"]),
+        ("merge", [("a", 2, 2), ("b", 3, 1)]),
+        ("execute",),
+    ]
+    assert c.report.ok and c.report.row_count == 2

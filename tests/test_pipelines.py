@@ -3,6 +3,8 @@ raw parquet → bronze (idempotent) → silver (normalize/dedup/DQ) → gold →
 labels → training snapshot → latest-features export.
 """
 
+import os
+
 import pytest
 from pyspark.sql import Row
 
@@ -288,27 +290,71 @@ def test_bronze_partition_pruning(spark, tmp_path):
         table.read().count()
 
 
+def test_bronze_replay_skipped_from_log_without_audit(spark, tmp_path):
+    """The replay check reads bronze's own log: a raw file whose
+    fingerprint is a txn of the table is skipped even when the audit
+    table lost its success row (a crash between the bronze commit and
+    the audit write). The raw file is written by pyarrow, so its schema
+    comes from a footer without Spark's own schema in it."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    raw, bronze, audit = (str(tmp_path / n) for n in ("raw", "bronze", "audit"))
+    os.makedirs(raw)
+    cols = ["order_id", "customer_id", "order_status", "order_purchase_timestamp"]
+    pq.write_table(
+        pa.table({c: pa.array([r[c] for r in RAW_ROWS], pa.string()) for c in cols}),
+        os.path.join(raw, "orders.parquet"),
+    )
+    first = bronze_ingest(spark, raw, bronze, audit, "r1")
+    assert first.rows_published == 7
+    table = ManagedTable(spark, bronze, keys=["order_id"])
+    fingerprints = {r[0] for r in table.read().select("_source_fingerprint").distinct().collect()}
+    assert set(table.transactions()) == fingerprints
+    shutil.rmtree(audit)
+    again = bronze_ingest(spark, raw, bronze, audit, "r2")
+    assert again.skipped and again.rows_published == 0
+    assert table.read().count() == 7
+    statuses = ManagedTable(spark, audit, keys=["dataset", "fingerprint"]).read()
+    assert [r["status"] for r in statuses.collect()] == ["skipped_already_ingested"]
+
+
 #: Spark jobs per stage call on the tiny lake. Each publish is one write
 #: action; AQE submits each of its shuffle stages as a job of its own,
-#: so a bound is the write's stage count plus the stage's own reads
-#: (bronze: raw schema inference and the audit probe; labels: the
-#: eligibility bound).
+#: so a bound is the write's stage count plus the stage's own reads.
+#: Bronze: the append and the audit append (the raw schema comes from a
+#: parquet footer, the replay check from bronze's log); silver: the
+#: merge and the quarantine write; labels: the eligibility bound;
+#: incremental: the changed keys, the silver slice and the merge
+#: exchanges, AQE's broadcast of the small key side, and the write.
 JOB_BUDGET = {
-    "bronze": 3,
+    "bronze": 2,
     "silver": 4,
-    "gold": 5,
+    "gold": 2,
     "labels": 7,
     "snapshot": 3,
     "export": 2,
+    "bronze_again": 2,
+    "replay": 1,
+    "incremental": 5,
 }
 
 
 def test_stage_job_and_file_budget(spark, tmp_path, count_jobs):
     """Each stage is one publish write plus its own reads, and the gold
     and labels snapshots are not split into shuffle-partition files
-    (caching a shuffled frame used to pin them: 32 files each)."""
+    (caching a shuffled frame used to pin them: 32 files each). A
+    second landing appends in two jobs, its replay is skipped in one
+    (the audit append), and an incremental gold update of the landing's
+    customers stays within its own budget."""
+    from pyspark.sql import functions as F
+
+    from ecom_churn_lakehouse_spark.pipelines.incremental import incremental_gold_update
+
     p = {k: str(tmp_path / k) for k in (
-        "raw", "bronze", "audit", "silver", "quarantine", "gold", "labels",
+        "raw", "raw2", "bronze", "audit", "silver", "quarantine", "gold", "labels",
         "snapshot", "export")}
     # the slice plus 64 one-order customers, so that the default 32
     # shuffle partitions all hold rows
@@ -318,6 +364,12 @@ def test_stage_job_and_file_budget(spark, tmp_path, count_jobs):
         for i in range(64)
     ]
     spark.createDataFrame(RAW_ROWS + extra).write.parquet(p["raw"])
+    landing = [
+        Row(order_id=f"ord-y{i}", customer_id=f"cust_x{i % 8}", order_status="delivered",
+            order_purchase_timestamp="2025-03-20 10:00:00")
+        for i in range(16)
+    ]
+    spark.createDataFrame(landing).write.parquet(p["raw2"])
     calls = {
         "bronze": lambda: bronze_ingest(spark, p["raw"], p["bronze"], p["audit"], "b"),
         "silver": lambda: silver_publish(
@@ -327,17 +379,29 @@ def test_stage_job_and_file_budget(spark, tmp_path, count_jobs):
         "snapshot": lambda: training_snapshot_publish(
             spark, p["gold"], p["labels"], p["snapshot"], AS_OF, "t"),
         "export": lambda: latest_features_export(spark, p["gold"], p["export"]),
+        "bronze_again": lambda: bronze_ingest(
+            spark, p["raw2"], p["bronze"], p["audit"], "b2"),
+        "replay": lambda: bronze_ingest(spark, p["raw2"], p["bronze"], p["audit"], "b3"),
+        "incremental": lambda: incremental_gold_update(
+            spark, p["silver"], p["gold"],
+            spark.createDataFrame([(f"cust_x{i}",) for i in range(8)], "customer_id string"),
+            AS_OF, "i"),
     }
-    jobs = {}
+    jobs, out = {}, {}
     partitions = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "32")  # the engine default
     try:
         for stage, fn in calls.items():
-            _, jobs[stage] = count_jobs(fn)
+            if stage == "incremental":  # the landing reaches silver first
+                silver_publish(spark, p["bronze"], p["silver"], p["quarantine"], "s2")
+            out[stage], jobs[stage] = count_jobs(fn)
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", partitions)
     over = {s: (n, JOB_BUDGET[s]) for s, n in jobs.items() if n > JOB_BUDGET[s]}
     assert not over, f"stages over their job budget (jobs, budget): {over}"
+    assert out["bronze_again"].rows_published == 16
+    assert out["replay"].skipped and out["replay"].rows_published == 0
+    assert out["incremental"].rows_published == 8
     keys = ["customer_id", "as_of_date"]
     for name in ("gold", "labels"):
         files = ManagedTable(spark, p[name], keys=keys).read().inputFiles()
