@@ -32,17 +32,20 @@ the semantics over plain parquet:
   ``txn`` action, so a writer can make ingestion idempotent from the
   table's own log (``transactions()``).
 - Each snapshot records its scan schema (``_schema.json``) when it is
-  staged, so reads and the delta-log mirror never run a
-  schema-inference job.
-- Writes stage a snapshot dir, then CLAIM the next commit sequence by
-  creating ``_commits/{seq}.commit`` with O_CREAT|O_EXCL — the
-  filesystem's put-if-absent CAS, the same coordination primitive as
-  the Delta transaction log. Concurrent writers race for the seq;
-  losers re-read the winner's snapshot, re-apply, and retry
-  (optimistic concurrency, serializable outcome — proven by the
-  two-thread racing-MERGE test in tests/test_managed_table.py). A
-  tiny ``_HEAD`` pointer file is atomically replaced after the claim
-  for readers (read-committed with at most a claim-to-swap lag).
+  staged, so reads and commits never run a schema-inference job.
+- One commit log, in the Delta transaction-log format:
+  ``_delta_log/{v:020d}.json``. A writer stages its snapshot dir
+  (``v-{id}``), writes the whole action file for version ``base + 1``
+  (commitInfo naming that dir, protocol / metaData, txn, remove every
+  previous file, add every new one) to a temp file and hard-links it
+  into place. ``os.link`` fails if the version exists, so the claim is
+  a put-if-absent with its content already written. A writer that
+  loses re-stages against the winner and retries (optimistic
+  concurrency, serializable — proven by the racing-MERGE test in
+  tests/test_managed_table.py). Readers scan the dir the newest
+  commitInfo names; ``read(version)`` is time travel over log
+  versions; after claiming ``v`` the writer deletes the dir of commit
+  ``v - 2`` (keep-last-2).
 
 On a production cluster with delta-spark installed, ``HAVE_DELTA``
 routes every operation to the real thing (ACID log, data skipping,
@@ -76,8 +79,8 @@ from ecom_churn_lakehouse_spark.session import HAVE_DELTA
 
 __all__ = ["Commit", "ManagedTable", "MergeBlocked"]
 
-_HEAD = "_HEAD"
-_COMMITS = "_commits"
+#: The commit log: one ``{v:020d}.json`` action file per version.
+_LOG = "_delta_log"
 #: Delta-protocol checkpoint pointer file (literal name per spec).
 _LAST_CKPT = "_last_checkpoint"
 #: Scan schema of a snapshot, written beside its data files (a leading
@@ -148,9 +151,9 @@ class ManagedTable:
 
     #: which commit-protocol implementation this process runs:
     #: "delta" (real Delta protocol via delta-spark) or
-    #: "head-pointer-parquet" (the emulation) — recorded so CI output
+    #: "delta-log-parquet" (the emulation) — recorded so CI output
     #: states which backend the managed-table suite exercised.
-    BACKEND = "delta" if HAVE_DELTA else "head-pointer-parquet"
+    BACKEND = "delta" if HAVE_DELTA else "delta-log-parquet"
 
     def __init__(
         self,
@@ -176,161 +179,92 @@ class ManagedTable:
             from delta.tables import DeltaTable  # type: ignore
 
             return DeltaTable.isDeltaTable(self.spark, self.path)
-        return os.path.exists(os.path.join(self.path, _HEAD))
+        return self._latest_version() >= 0
 
     # ------------------------------------------------------------- reads
 
-    def _head_dir(self) -> str:
-        with open(os.path.join(self.path, _HEAD)) as f:
-            return os.path.join(self.path, f.read().strip())
-
-    def versions(self) -> list[str]:
-        """Snapshot ids on disk, oldest→newest (≤2 under keep-last-2).
-
-        Version names embed a monotone sequence number, so
-        lexicographic order IS commit order — the flat-file analogue of
-        Delta's version counter.
-        """
-        if not os.path.isdir(self.path):
+    def _log_versions(self) -> list[int]:
+        """Versions of the JSON commits in the log, oldest first."""
+        ldir = os.path.join(self.path, _LOG)
+        if not os.path.isdir(ldir):
             return []
-        return sorted(d for d in os.listdir(self.path) if d.startswith("v-"))
+        return sorted(int(fn.split(".")[0]) for fn in os.listdir(ldir) if fn.endswith(".json"))
 
-    def read(self, version: str | None = None) -> DataFrame:
-        """Read HEAD, or a retained snapshot by id (time travel).
+    def _latest_version(self) -> int:
+        """The newest committed version, -1 for a table with no commit."""
+        return max(self._log_versions(), default=-1)
+
+    def _snapshot_dir(self, version: int) -> str | None:
+        """The snapshot dir commit ``version``'s commitInfo (its first
+        action) names, or None when the log holds no such JSON commit."""
+        if version < 0:
+            return None
+        try:
+            with open(os.path.join(self.path, _LOG, f"{version:020d}.json")) as f:
+                info = json.loads(f.readline())["commitInfo"]
+        except FileNotFoundError:
+            return None
+        return os.path.join(self.path, info["snapshotDir"])
+
+    def versions(self) -> list[int]:
+        """Log versions whose snapshot is still on disk, oldest→newest
+        (≤2 under keep-last-2): what ``read(version)`` can travel to."""
+        dirs = ((v, self._snapshot_dir(v)) for v in self._log_versions())
+        return [v for v, d in dirs if d is not None and os.path.isdir(d)]
+
+    def read(self, version: int | None = None) -> DataFrame:
+        """Read the newest commit, or a retained log version (time travel).
 
         With delta-spark, ``version`` maps to ``versionAsOf``; the
-        emulation resolves the retained snapshot dir (only the previous
-        commit survives vacuum — a bounded, Delta-retention-like window).
+        emulation scans the snapshot dir that commit's commitInfo names
+        (only the previous commit survives vacuum — a bounded,
+        Delta-retention-like window).
         """
         if HAVE_DELTA:
             reader = self.spark.read.format("delta")
             if version is not None:
                 reader = reader.option("versionAsOf", version)
             return reader.load(self.path)
-        if version is None:
-            return self._scan(self._head_dir())
-        target = os.path.join(self.path, version)
-        if not os.path.isdir(target):
+        snapshot = self._snapshot_dir(
+            self._latest_version() if version is None else version
+        )
+        if snapshot is None or not os.path.isdir(snapshot):
+            if version is None:
+                raise FileNotFoundError(f"no committed snapshot at {self.path}")
             raise ValueError(
                 f"version {version!r} not retained; available: {self.versions()}"
             )
-        return self._scan(target)
+        return self._scan(snapshot)
 
     @staticmethod
-    def _recorded_schema(snapshot: str) -> T.StructType | None:
-        try:
-            with open(os.path.join(snapshot, _SCHEMA)) as f:
-                return T.StructType.fromJson(json.load(f))
-        except FileNotFoundError:
-            return None
+    def _recorded_schema(snapshot: str) -> T.StructType:
+        with open(os.path.join(snapshot, _SCHEMA)) as f:
+            return T.StructType.fromJson(json.load(f))
 
     def _scan(self, snapshot: str) -> DataFrame:
         """Scan a snapshot dir with the schema recorded when it was
-        staged — no inference job. Snapshots staged before schemas were
-        recorded fall back to inference."""
-        schema = self._recorded_schema(snapshot)
-        if schema is None:
-            return self.spark.read.parquet(snapshot)
-        return self.spark.read.schema(schema).parquet(snapshot)
+        staged — no inference job."""
+        return self.spark.read.schema(self._recorded_schema(snapshot)).parquet(snapshot)
 
     # ------------------------------------------------------------ writes
     #
-    # Multi-writer optimistic concurrency (VERDICT r7 directive #4).
-    # The coordination point is a put-if-absent commit LOG, the same
-    # discipline as the Delta protocol's transaction log (one file per
-    # version, creation must be exclusive): a writer stages its
-    # snapshot in a hidden dir, then tries to CLAIM the next sequence
-    # number by creating ``_commits/{seq}.commit`` with O_CREAT|O_EXCL
-    # — the filesystem's atomic compare-and-swap. Exactly one racer
-    # wins a given seq; losers detect the conflict, abandon or restage
-    # against a fresh read, and retry at the next seq
-    # (retry-with-reread). The ``_HEAD`` pointer remains a derived
-    # reader convenience (read-committed with at most a claim-to-swap
-    # lag); WRITERS always resolve their base snapshot from the log so
-    # no committed merge can be overwritten by a stale racer.
-
-    def _commit_seq(self) -> int:
-        """Highest claimed commit sequence (-1 for an empty table).
-        Falls back to the HEAD name for pre-log tables."""
-        seqs = [-1]
-        cdir = os.path.join(self.path, _COMMITS)
-        if os.path.isdir(cdir):
-            for fn in os.listdir(cdir):
-                try:
-                    seqs.append(int(fn.split(".")[0]))
-                except ValueError:
-                    continue
-        if self.exists():
-            head = os.path.basename(self._head_dir())
-            try:
-                seqs.append(int(head.split("-")[1]))
-            except (IndexError, ValueError):
-                pass
-        return max(seqs)
-
-    def _committed_dir(self) -> str | None:
-        """Resolve the latest COMMITTED snapshot dir from the log —
-        the writer-side read that makes merges serializable.
-
-        Claims are atomic (``_try_publish`` hard-links a fully-written
-        temp file into place, so a commit file is never observed
-        empty, and the snapshot dir is renamed into place BEFORE the
-        claim, so a claimed commit always has its dir). Defensively —
-        for tables written by a pre-fix writer that crashed mid-claim
-        (r8 ADVICE #2) — an unresolvable top claim is waited out
-        briefly and then SKIPPED in favor of the next-highest
-        committed seq instead of blocking the table forever; the
-        abandoned seq stays claimed so no writer ever reuses it."""
-        seqs: list[int] = []
-        cdir = os.path.join(self.path, _COMMITS)
-        if os.path.isdir(cdir):
-            for fn in os.listdir(cdir):
-                try:
-                    seqs.append(int(fn.split(".")[0]))
-                except ValueError:
-                    continue
-        if not seqs:  # pre-log table: HEAD is it
-            return self._head_dir() if self.exists() else None
-        for retries, seq in zip((200, 10, 1), sorted(seqs, reverse=True)):
-            commit_file = os.path.join(cdir, f"{seq:08d}.commit")
-            for _ in range(retries):  # top seq: <= ~2 s, normally 1st hit
-                try:
-                    with open(commit_file) as f:
-                        name = f.read().strip()
-                except OSError:
-                    name = ""
-                if name:
-                    d = os.path.join(self.path, name)
-                    if os.path.isdir(d):
-                        return d
-                time.sleep(0.01)
-        raise RuntimeError(
-            f"no commit at {self.path} resolves to a snapshot "
-            f"(claimed seqs: {sorted(seqs)[-3:]})"
-        )
-
-    def _read_committed(self) -> DataFrame:
-        d = self._committed_dir()
-        if d is None:
-            raise FileNotFoundError(f"no committed snapshot at {self.path}")
-        return self._scan(d)
-
-    def _read_base(self) -> DataFrame | None:
-        """The committed snapshot a write builds on, or None for a
-        table with no commit yet."""
-        try:
-            return self._read_committed()
-        except FileNotFoundError:
-            return None
+    # Multi-writer optimistic concurrency over the one commit log. A
+    # writer resolves its base (the newest version and the snapshot dir
+    # it names), stages a new snapshot dir under its final name, and
+    # claims version base + 1 by hard-linking a fully written action
+    # file to ``_delta_log/{base + 1:020d}.json`` — the Delta protocol's
+    # put-if-absent commit. Exactly one racer wins a version; a loser
+    # restages against the winner (or, for a blind overwrite, re-claims
+    # its staged dir) at the next version. Nothing reads or deletes a
+    # dir that no commit names, so a racer's staged write is safe from
+    # the winner's vacuum, and a crash before the claim leaves only an
+    # unnamed dir.
 
     def _stage(self, df: DataFrame, partition_by: list[str] | None) -> str:
-        """Stage a snapshot in a hidden dir (the WRITE half of a
-        commit). Runs the Spark action — the only one of the commit —
-        and records the scan schema beside the data files, but
-        publishes nothing: readers and the vacuum never touch
-        ``.staged-*`` dirs, so a concurrent winner's cleanup cannot
-        delete a racer's in-flight write."""
-        target = os.path.join(self.path, f".staged-{uuid.uuid4().hex[:8]}")
+        """Write ``df`` as a new snapshot dir under its final name (the
+        one Spark action of a commit) and record the scan schema beside
+        the data files. Unpublished until a commit names it."""
+        target = os.path.join(self.path, f"v-{uuid.uuid4().hex[:12]}")
         writer = df.write.mode("overwrite")
         if partition_by:
             writer = writer.partitionBy(*partition_by)
@@ -339,141 +273,150 @@ class ManagedTable:
             f.write(_scan_schema(df, partition_by).json())
         return target
 
-    def _abandon_staged(self, staged: str) -> None:
-        shutil.rmtree(staged, ignore_errors=True)
-
-    @staticmethod
-    def _version_seq(name: str) -> int:
-        """Sequence number embedded in a ``v-{seq}-{uuid}`` name."""
-        try:
-            return int(name.split("-")[1])
-        except (IndexError, ValueError):
-            return -1
-
-    def _swap_head(self, version: str) -> None:
-        """Point ``_HEAD`` at ``version`` and vacuum (keep-last-2 on
-        snapshots; keep-last-16 on commit-log files).
-
-        r8 ADVICE #3 hardening — both the keep set and the swap are
-        derived from COMMIT-LOG order, not HEAD order, so a delayed
-        winner of seq N whose swap runs after seq N+1 committed can
-        neither regress HEAD nor rmtree N+1's snapshot:
-
-        - the keep set = the version names in the two HIGHEST commit
-          files (read from the log), plus any snapshot dir whose seq
-          exceeds the top logged seq (a racer that renamed its staged
-          dir but hasn't claimed yet — claims happen after the rename);
-        - HEAD is replaced only if ``version``'s seq is >= the seq of
-          the version HEAD currently names.
-        """
-        cdir = os.path.join(self.path, _COMMITS)
-        committed: list[tuple[int, str]] = []
-        if os.path.isdir(cdir):
-            for fn in os.listdir(cdir):
-                try:
-                    seq = int(fn.split(".")[0])
-                except ValueError:
-                    continue
-                try:
-                    with open(os.path.join(cdir, fn)) as f:
-                        name = f.read().strip()
-                except OSError:
-                    continue
-                if name:
-                    committed.append((seq, name))
-        committed.sort()
-        keep = {name for _, name in committed[-2:]} or {version}
-        top_seq = committed[-1][0] if committed else self._version_seq(version)
-        # seq-ordered HEAD swap: never point HEAD at an older commit
-        current_head_seq = -1
-        if self.exists():
-            current_head_seq = self._version_seq(
-                os.path.basename(self._head_dir())
-            )
-        if self._version_seq(version) >= current_head_seq:
-            tmp = os.path.join(self.path, f".head-{uuid.uuid4().hex[:8]}")
-            with open(tmp, "w") as f:
-                f.write(version)
-            os.replace(tmp, os.path.join(self.path, _HEAD))  # atomic swap
-        # Deferred vacuum: retain the immediately-previous committed
-        # snapshot so still-lazy DataFrames from an earlier read()
-        # (Spark re-resolves files at action time) and readers that
-        # grabbed HEAD just before the swap survive this commit; also
-        # retain renamed-but-not-yet-claimed racer dirs (seq >= top:
-        # a racer contending for the CURRENT top seq may still be
-        # between its rename and its claim attempt — only strictly
-        # older unclaimed orphans are garbage).
-        for d in os.listdir(self.path):
-            if (
-                d.startswith("v-")
-                and d not in keep
-                and self._version_seq(d) < top_seq
-            ):
-                shutil.rmtree(os.path.join(self.path, d), ignore_errors=True)
-        if os.path.isdir(cdir):
-            logs = sorted(os.listdir(cdir))
-            for fn in logs[:-16]:
-                try:
-                    os.remove(os.path.join(cdir, fn))
-                except OSError:
-                    pass
-
-    def _try_publish(
+    def _try_commit(
         self,
-        staged: str,
-        claim_seq: int,
-        partition_by: list[str] | None = None,
-        commit_info: dict | None = None,
+        version: int,
+        snapshot: str,
+        partition_by: list[str] | None,
+        commit_info: dict,
         txn_id: str | None = None,
     ) -> bool:
-        """CAS: claim ``claim_seq`` by hard-linking a fully-written
-        temp file into the commit log (``os.link`` fails-if-exists —
-        an atomic put-if-absent with the content already in place, so
-        a crashed writer can never leave an EMPTY commit file blocking
-        the table: r8 ADVICE #2). The staged dir is renamed to its
-        final version name BEFORE the claim, so a claimed commit
-        always resolves to an existing snapshot; a crash between
-        rename and claim leaves only an unclaimed orphan dir that the
-        next vacuum collects. On conflict the rename is undone and
-        False is returned. ``commit_info`` (operation, parameters,
-        metrics) goes into the delta-log mirror's commitInfo, and
-        ``txn_id`` into a ``txn`` action beside it."""
-        os.makedirs(self.path, exist_ok=True)
-        cdir = os.path.join(self.path, _COMMITS)
-        os.makedirs(cdir, exist_ok=True)
-        commit_file = os.path.join(cdir, f"{claim_seq:08d}.commit")
-        if os.path.exists(commit_file):
-            return False  # seq already owned; skip the rename dance
-        version = f"v-{claim_seq:08d}-{uuid.uuid4().hex[:8]}"
-        versioned = os.path.join(self.path, version)
-        os.rename(staged, versioned)
-        tmp = os.path.join(self.path, f".claim-{uuid.uuid4().hex[:8]}")
+        """Claim log ``version`` for ``snapshot``: write the whole action
+        file to a temp file and hard-link it to ``{version:020d}.json``.
+        ``os.link`` fails if the version exists, so exactly one writer
+        wins it and no reader ever sees a partial file. Returns False,
+        with nothing changed, when another commit holds the version.
+
+        Each commit publishes a self-contained snapshot dir, so its
+        actions are remove(every previously active file) + add(every
+        file of the new dir) — the shape delta-spark writes for an
+        overwrite. An append's dir holds hard links to the base
+        snapshot's files plus the new rows' files; the links are listed
+        as adds under their new paths, like every other file. The MERGE
+        / APPEND semantics live in how the snapshot was BUILT, and
+        ``commit_info`` (operation, parameters, metrics) names the
+        operation that built it; the commitInfo also names the snapshot
+        dir, which readers scan (an empty partitioned write has no data
+        file to name it). ``txn_id`` adds a ``txn`` action (appId =
+        ``txn_id``, version = this commit). The metaData schema is the
+        one recorded at staging (no Spark job).
+        """
+        ldir = os.path.join(self.path, _LOG)
+        os.makedirs(ldir, exist_ok=True)
+        now_ms = int(time.time() * 1000)
+        actions: list[dict] = [
+            {
+                "commitInfo": {
+                    "timestamp": now_ms,
+                    **commit_info,
+                    "snapshotDir": os.path.basename(snapshot),
+                    "engineInfo": "ecom-churn-lakehouse-spark emulation",
+                    "txnId": str(uuid.uuid4()),
+                }
+            }
+        ]
+        prev_meta, prev_active = self.delta_log_state(version - 1)
+        schema_string = self._recorded_schema(snapshot).json()
+        if prev_meta is None:
+            actions.append(
+                {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
+            )
+        if (
+            prev_meta is None
+            or prev_meta.get("schemaString") != schema_string
+            or prev_meta.get("partitionColumns") != (partition_by or [])
+        ):
+            actions.append(
+                {
+                    "metaData": {
+                        "id": (
+                            prev_meta["id"]
+                            if prev_meta is not None
+                            else str(
+                                uuid.uuid5(uuid.NAMESPACE_URL, self.path)
+                            )
+                        ),
+                        "format": {"provider": "parquet", "options": {}},
+                        "schemaString": schema_string,
+                        "partitionColumns": list(partition_by or []),
+                        "configuration": {},
+                        "createdTime": (
+                            prev_meta["createdTime"]
+                            if prev_meta is not None
+                            else now_ms
+                        ),
+                    }
+                }
+            )
+        if txn_id is not None:
+            actions.append(
+                {"txn": {"appId": txn_id, "version": version, "lastUpdated": now_ms}}
+            )
+        for path in sorted(prev_active):
+            actions.append(
+                {
+                    "remove": {
+                        "path": path,
+                        "deletionTimestamp": now_ms,
+                        "dataChange": True,
+                    }
+                }
+            )
+        actions.extend({"add": a} for a in self._delta_files(snapshot))
+        tmp = os.path.join(ldir, f".{uuid.uuid4().hex[:8]}.tmp")
         with open(tmp, "w") as f:
-            f.write(version)
+            for a in actions:
+                f.write(json.dumps(a, separators=(",", ":")) + "\n")
         try:
-            os.link(tmp, commit_file)  # atomic CAS, content in place
+            # put-if-absent, with the content already in place
+            os.link(tmp, os.path.join(ldir, f"{version:020d}.json"))
         except FileExistsError:
-            os.rename(versioned, staged)  # lost the race for this seq
-            return False
+            return False  # lost the race for this version
         finally:
             os.remove(tmp)
-        self._write_delta_log(claim_seq, versioned, partition_by, commit_info, txn_id)
-        self._swap_head(version)
+        self._vacuum(version)
+        if (
+            self.checkpoint_interval > 0
+            and version > 0
+            and version % self.checkpoint_interval == 0
+        ):
+            # Checkpointing is a read-path optimization only: a failed
+            # checkpoint (pyarrow import/IO error) must never abort a
+            # durable commit — the JSON action file is claimed;
+            # skipping the checkpoint merely costs replay time.
+            try:
+                self._write_checkpoint(version)
+            except Exception as exc:  # pragma: no cover - env-specific
+                print(
+                    "managed_table: checkpoint write skipped for "
+                    f"v{version} ({type(exc).__name__}: {exc}); commit "
+                    "is durable, replay falls back to JSON log"
+                )
         return True
 
-    # --------------------------------------------- delta-log emulation
+    def _vacuum(self, version: int) -> None:
+        """Keep-last-2, from the log alone: after commit ``version``,
+        delete the snapshot dir commit ``version - 2`` names. The
+        previous commit's dir survives, so still-lazy DataFrames from an
+        earlier ``read()`` (Spark lists files at action time) outlive
+        one more commit, and a delayed vacuum never touches a newer
+        commit's dir."""
+        old = self._snapshot_dir(version - 2)
+        if old is not None:
+            shutil.rmtree(old, ignore_errors=True)
+
+    # ------------------------------------------------- the commit log
     #
-    # VERDICT r8 directive #6: the put-if-absent commit machinery above
-    # is structurally the Delta commit protocol; mirror each commit as
-    # the actual ``_delta_log/{version:020d}.json`` action file
-    # (protocol / metaData / add / remove / commitInfo, one JSON per
-    # line — the open Delta transaction-log format, cf. the reference's
-    # delta-spark MERGE publish at
-    # ``orders_bronze_to_silver.py:184-195``) so the table directory is
-    # readable by any Delta client if one becomes installable. The
-    # ``_commits`` CAS log stays authoritative for the emulation; the
-    # delta log is a faithful derived mirror (written by the claim
-    # winner immediately after the claim, before the HEAD swap).
+    # ``_delta_log`` holds one ``{version:020d}.json`` action file per
+    # commit (commitInfo / protocol / metaData / txn / remove / add, one
+    # JSON per line — the open Delta transaction-log format, cf. the
+    # reference's delta-spark MERGE publish at
+    # ``orders_bronze_to_silver.py:184-195``), plus protocol checkpoints.
+    # It is the emulation's only commit record: its newest version is
+    # HEAD, its commitInfo names each version's snapshot dir, and its
+    # replay gives the active file set, schema and txn ids, so the table
+    # directory is readable by any Delta client if one becomes
+    # installable.
 
     def _delta_files(self, versioned: str) -> list[dict]:
         """Data files of a snapshot dir as Delta ``add``-action dicts
@@ -507,10 +450,9 @@ class ManagedTable:
 
         ``use_checkpoint`` defaults to ``checkpoint_interval > 0``, so
         an instance configured with interval<=0 is checkpoint-free on
-        the READ path too, not just the write path (r9 ADVICE #2: a
-        raw-JSON replay control must not silently read through a
-        checkpoint some other writer left behind). Pass explicitly to
-        override either way.
+        the READ path too, not just the write path (a raw-JSON replay
+        control must not silently read through a checkpoint some other
+        writer left behind). Pass explicitly to override either way.
         """
         meta, active, _ = self._log_state(upto_version, use_checkpoint)
         return meta, active
@@ -575,27 +517,6 @@ class ManagedTable:
                         txns[action["txn"]["appId"]] = action["txn"]
         return meta, active, txns
 
-    def read_via_delta_log(self, upto_version: int | None = None) -> DataFrame:
-        """Read the table THROUGH the Delta transaction log — resolve
-        the active file set by log replay (``delta_log_state``) and
-        scan exactly those parquet files, the way a real Delta reader
-        does. With ``upto_version`` this is log-replay time travel.
-        Exists so the log mirror is load-bearing, not decorative: the
-        golden tests assert read_via_delta_log() ≡ read()."""
-        if HAVE_DELTA:
-            reader = self.spark.read.format("delta")
-            if upto_version is not None:
-                reader = reader.option("versionAsOf", str(upto_version))
-            return reader.load(self.path)
-        meta, active = self.delta_log_state(upto_version)
-        if meta is None or not active:
-            raise FileNotFoundError(
-                f"no delta log (or empty table) at {self.path}"
-            )
-        return self.spark.read.parquet(
-            *[os.path.join(self.path, p) for p in sorted(active)]
-        )
-
     def history(self) -> list[dict]:
         """Commit history, newest first — the DESCRIBE HISTORY
         analogue: one dict per commit with version, timestamp,
@@ -640,123 +561,6 @@ class ManagedTable:
                         break
         return out
 
-    def _write_delta_log(
-        self,
-        version: int,
-        versioned: str,
-        partition_by: list[str] | None,
-        commit_info: dict | None = None,
-        txn_id: str | None = None,
-    ) -> None:
-        """Emit the Delta-protocol action file for commit ``version``.
-
-        Each commit publishes a new self-contained snapshot dir, so
-        every commit is remove(all previous active files) + add(all
-        files of the new dir) — the same shape delta-spark writes for
-        an overwrite txn. An append's dir holds hard links to the base
-        snapshot's files plus the new rows' files; the links are listed
-        as adds under their new paths, like every other file. The MERGE
-        / APPEND semantics live in how the new snapshot was BUILT, and
-        the commitInfo names the operation that built it. ``txn_id``
-        adds a ``txn`` action (appId = ``txn_id``, version = this
-        commit). The metaData schema is the one recorded at staging (no
-        Spark job).
-        """
-        ldir = os.path.join(self.path, "_delta_log")
-        os.makedirs(ldir, exist_ok=True)
-        now_ms = int(time.time() * 1000)
-        info = commit_info or {
-            "operation": "WRITE",
-            "operationParameters": {
-                "mode": "Overwrite",
-                "partitionBy": json.dumps(partition_by or []),
-            },
-        }
-        actions: list[dict] = [
-            {
-                "commitInfo": {
-                    "timestamp": now_ms,
-                    **info,
-                    "engineInfo": "ecom-churn-lakehouse-spark emulation",
-                    "txnId": str(uuid.uuid4()),
-                }
-            }
-        ]
-        prev_meta, prev_active = self.delta_log_state(version - 1)
-        schema = self._recorded_schema(versioned)
-        if schema is None:
-            schema = self.spark.read.parquet(versioned).schema
-        schema_string = schema.json()
-        if version == 0 or prev_meta is None:
-            actions.append(
-                {"protocol": {"minReaderVersion": 1, "minWriterVersion": 2}}
-            )
-        if (
-            prev_meta is None
-            or prev_meta.get("schemaString") != schema_string
-            or prev_meta.get("partitionColumns") != (partition_by or [])
-        ):
-            actions.append(
-                {
-                    "metaData": {
-                        "id": (
-                            prev_meta["id"]
-                            if prev_meta is not None
-                            else str(
-                                uuid.uuid5(uuid.NAMESPACE_URL, self.path)
-                            )
-                        ),
-                        "format": {"provider": "parquet", "options": {}},
-                        "schemaString": schema_string,
-                        "partitionColumns": list(partition_by or []),
-                        "configuration": {},
-                        "createdTime": (
-                            prev_meta["createdTime"]
-                            if prev_meta is not None
-                            else now_ms
-                        ),
-                    }
-                }
-            )
-        if txn_id is not None:
-            actions.append(
-                {"txn": {"appId": txn_id, "version": version, "lastUpdated": now_ms}}
-            )
-        for path in sorted(prev_active):
-            actions.append(
-                {
-                    "remove": {
-                        "path": path,
-                        "deletionTimestamp": now_ms,
-                        "dataChange": True,
-                    }
-                }
-            )
-        actions.extend({"add": a} for a in self._delta_files(versioned))
-        tmp = os.path.join(ldir, f".tmp-{uuid.uuid4().hex[:8]}")
-        with open(tmp, "w") as f:
-            for a in actions:
-                f.write(json.dumps(a, separators=(",", ":")) + "\n")
-        os.rename(tmp, os.path.join(ldir, f"{version:020d}.json"))
-        if (
-            self.checkpoint_interval > 0
-            and version > 0
-            and version % self.checkpoint_interval == 0
-        ):
-            # Checkpointing is a read-path optimization only: a failed
-            # checkpoint (pyarrow import/IO error) must never abort an
-            # already-durable commit — the JSON action file is written
-            # and the seq is claimed; skipping the checkpoint merely
-            # costs replay time (r9 ADVICE #3).
-            try:
-                self._write_checkpoint(version)
-            except Exception as exc:  # pragma: no cover - env-specific
-                print(
-                    "managed_table: checkpoint write skipped for "
-                    f"v{version} ({type(exc).__name__}: {exc}); commit "
-                    "is durable, replay falls back to JSON log"
-                )
-
     # Delta checkpoint parquet schema: one action per row, exactly one
     # of the struct columns non-null — the protocol's checkpoint file
     # shape (partitionValues as map<string,string>). The remove column
@@ -764,8 +568,7 @@ class ManagedTable:
     # LIVE state; removes matter for incremental readers); txn rows
     # carry the appends' transaction ids. Strict Delta clients
     # (delta-rs, delta-spark) expect the columns to exist and the
-    # metaData struct to carry format/name/description/configuration —
-    # r9 ADVICE #1.
+    # metaData struct to carry format/name/description/configuration.
     def _ckpt_schema(self):
         import pyarrow as pa
 
@@ -919,13 +722,12 @@ class ManagedTable:
         with open(ptr_tmp, "w") as f:
             json.dump({"version": version, "size": len(rows)}, f)
         os.rename(ptr_tmp, os.path.join(ldir, _LAST_CKPT))
-        # Keep only the 2 newest checkpoints (mirror of the
-        # keep-last-16 commit-log policy): older ones are fully
+        # Keep only the 2 newest checkpoints: older ones are fully
         # superseded, and the _delta_log JSON commits are retained in
         # full, so a replay target below the retained checkpoint window
-        # still reconstructs via raw-JSON replay from zero. r9 ADVICE
-        # #4 — without this the log accretes one checkpoint per
-        # interval for the table's lifetime.
+        # still reconstructs via raw-JSON replay from zero. Without
+        # this the log accretes one checkpoint per interval for the
+        # table's lifetime.
         ckpts = sorted(
             fn
             for fn in os.listdir(ldir)
@@ -958,7 +760,7 @@ class ManagedTable:
                 fmt = m.get("format") or {}
                 meta = {
                     "id": m["id"],
-                    # name/description round-trip (r10 ADVICE): a
+                    # name/description round-trip: a
                     # checkpoint written FROM checkpoint-recovered
                     # state must not null out fields an external
                     # writer set — read back everything the write
@@ -1013,7 +815,7 @@ class ManagedTable:
 
     def _occ_publish(
         self,
-        build: Callable[[], tuple[DataFrame, Callable]],
+        build: Callable[[str | None], tuple[DataFrame, Callable]],
         operation: str,
         parameters: dict[str, str],
         partition_by: list[str] | None = None,
@@ -1021,51 +823,47 @@ class ManagedTable:
         max_retries: int = 8,
         txn_id: str | None = None,
     ) -> Commit:
-        """Optimistic-concurrency publish loop: stage ``build()``,
-        CAS-claim the next seq, and on conflict re-read + re-apply
-        (``base_dependent=True``, the MERGE/append path — the frame
-        must be recomputed against the winner's snapshot) or just
-        re-claim (``base_dependent=False``, blind overwrite).
+        """Optimistic-concurrency publish loop. Each attempt resolves
+        its base once — the newest log version and the snapshot dir it
+        names — and claims version base + 1. On a lost claim a
+        ``base_dependent`` write (MERGE, append, OPTIMIZE) restages
+        against the winner's snapshot; a blind overwrite re-claims with
+        the dir it already staged.
 
-        ``build()`` returns ``(frame, finish)``. ``finish(staged)`` runs
-        after the staged write and before the claim: it completes the
-        staged dir (an append carries the base snapshot's files in) and
-        returns the observed ``(metrics, report)``, or raises — a
-        failed verdict — which abandons the staged dir unpublished.
-        Every restaged attempt calls ``build()`` again, so each gets a
-        fresh ``Observation``."""
+        ``build(base_dir)`` (``None`` for an empty table) returns
+        ``(frame, finish)``. ``finish(staged)`` runs after the staged
+        write and before the claim: it completes the staged dir (an
+        append carries the base snapshot's files in) and returns the
+        observed ``(metrics, report)``, or raises — a failed verdict —
+        which abandons the staged dir unpublished. Every restaged
+        attempt calls ``build()`` again, so each gets a fresh
+        ``Observation``."""
         staged: str | None = None
         try:
             for _ in range(max_retries + 1):
-                base_seq = self._commit_seq()
-                if (
-                    staged is None
-                    or base_dependent
-                    or not os.path.isdir(staged)  # vacuumed mid-race
-                ):
+                base = self._latest_version()
+                if staged is None or base_dependent:
                     if staged is not None:
-                        self._abandon_staged(staged)
+                        shutil.rmtree(staged, ignore_errors=True)
                         staged = None
-                    frame, finish = build()
+                    frame, finish = build(self._snapshot_dir(base))
                     staged = self._stage(frame, partition_by)
                     observed, report = finish(staged)
                     metrics = {**observed, **self._file_metrics(staged)}
-                    # a commit that landed while we were staging makes
-                    # our frame stale — claim only our read's successor
                 info = {
                     "operation": operation,
                     "operationParameters": parameters,
                     "operationMetrics": metrics,
                 }
-                if self._try_publish(staged, base_seq + 1, partition_by, info, txn_id):
+                if self._try_commit(base + 1, staged, partition_by, info, txn_id):
                     staged = None
-                    return Commit(base_seq + 1, operation, metrics, report)
+                    return Commit(base + 1, operation, metrics, report)
         finally:
             if staged is not None:
-                self._abandon_staged(staged)
+                shutil.rmtree(staged, ignore_errors=True)
         raise RuntimeError(
             f"managed-table commit contention: {max_retries + 1} attempts "
-            f"lost the CAS at {self.path}"
+            f"lost the claim at {self.path}"
         )
 
     def _delta_commit(self, report: DQReport | None = None) -> Commit:
@@ -1099,7 +897,7 @@ class ManagedTable:
             w.save(self.path)
             return self._delta_commit()
         return self._occ_publish(
-            lambda: (df, lambda staged: ({}, None)),
+            lambda base: (df, lambda staged: ({}, None)),
             "WRITE",
             self._write_params("Overwrite", partition_by),
             partition_by,
@@ -1148,8 +946,7 @@ class ManagedTable:
             w.save(self.path)
             return self._delta_commit()
 
-        def build():
-            base = self._committed_dir()
+        def build(base: str | None):
             incoming = df if base is None else self._conform(
                 df, base, partition_by, evolve_schema
             )
@@ -1193,7 +990,7 @@ class ManagedTable:
                     f"append to {self.path} must keep its partition columns "
                     f"{layout}; got {list(partition_by or [])}"
                 )
-        current = self._recorded_schema(base) or self.spark.read.parquet(base).schema
+        current = self._recorded_schema(base)
         missing = [c for c in current.names if c not in df.columns]
         extra = [c for c in df.columns if c not in current.names]
         if (missing or extra) and not evolve_schema:
@@ -1351,17 +1148,17 @@ class ManagedTable:
         # key; hit = 1 when one of those source rows is an upsert
         matched = ~is_src & keyed & (n_src > 0)
 
-        def build():
-            # Re-resolved from the commit LOG on every (re)try: a racer
-            # that lost the CAS re-applies its upserts on top of the
-            # winner's snapshot — serializable outcome, no lost update.
-            current = self._read_base()
+        def build(base: str | None):
+            # ``base`` is re-resolved from the log on every (re)try: a
+            # racer that lost the claim re-applies its upserts on top of
+            # the winner's snapshot — serializable, no lost update.
             tagged = source.select(
                 *data_cols, upsert.alias("__mt_up"), F.lit(True).alias("__mt_src")
             )
-            if current is None:
+            if base is None:
                 both = tagged
             else:
+                current = self._scan(base)
                 extra = set(data_cols) - set(current.columns)
                 if extra and not evolve_schema:
                     raise ValueError(
@@ -1461,14 +1258,17 @@ class ManagedTable:
             else:
                 opt.executeCompaction()
             return None
-        head = self._head_dir()
-        if target_files is None:
-            total = sum(os.path.getsize(os.path.join(head, f)) for f in _data_files(head))
-            target_files = max(1, math.ceil(total / target_file_bytes))
-        def rewrite() -> DataFrame:
-            # Re-read per OCC attempt: a data commit racing the
-            # compaction must not be clobbered by a stale rewrite.
-            df = self._read_committed()
+
+        def rewrite(base: str | None) -> DataFrame:
+            # Re-read and re-sized per OCC attempt: a data commit racing
+            # the compaction must not be clobbered by a stale rewrite.
+            if base is None:
+                raise FileNotFoundError(f"no committed snapshot at {self.path}")
+            n = target_files
+            if n is None:
+                total = sum(os.path.getsize(os.path.join(base, f)) for f in _data_files(base))
+                n = max(1, math.ceil(total / target_file_bytes))
+            df = self._scan(base)
             if zorder_by:
                 # True multi-dimensional clustering: range-partition +
                 # sort by the Morton code so every file's bounding box
@@ -1482,27 +1282,27 @@ class ManagedTable:
                 zcol = "__zvalue"
                 return (
                     with_zorder_value(df, zorder_by, out=zcol)
-                    .repartitionByRange(target_files, F.col(zcol))
+                    .repartitionByRange(n, F.col(zcol))
                     .sortWithinPartitions(zcol)
                     .drop(zcol)
                 )
             if sort_by:
                 return df.repartitionByRange(
-                    target_files, *[F.col(c) for c in sort_by]
+                    n, *[F.col(c) for c in sort_by]
                 ).sortWithinPartitions(*sort_by)
-            return df.coalesce(target_files)
+            return df.coalesce(n)
 
         # Partition-dir layout is not preserved: a sorted compaction IS
         # the layout. Callers that need dir partitioning re-publish via
         # overwrite(partition_by=...).
         return self._occ_publish(
-            lambda: (rewrite(), lambda staged: ({}, None)),
+            lambda base: (rewrite(base), lambda staged: ({}, None)),
             "OPTIMIZE",
             {"zOrderBy": json.dumps(zorder_by or sort_by or [])},
         )
 
     def diff_versions(
-        self, old: str, new: str | None = None
+        self, old: int, new: int | None = None
     ) -> DataFrame:
         """Row-level changes between two snapshots — the change-data-
         feed analogue over time travel: one row per key whose presence

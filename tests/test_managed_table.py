@@ -1,12 +1,25 @@
 """Managed-table layer: merge/append/overwrite/existence (S4-S9)."""
 
+import json
 import os
+import shutil
 
 import pytest
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from ecom_churn_lakehouse_spark.sources.managed_table import ManagedTable
+
+
+def _head(t):
+    """The snapshot dir the table's newest commit names."""
+    return t._snapshot_dir(t.versions()[-1])
+
+
+def _unnamed_dirs(t):
+    """Snapshot dirs on disk that no retained commit names."""
+    named = {os.path.basename(t._snapshot_dir(v)) for v in t.versions()}
+    return {d for d in os.listdir(t.path) if d.startswith("v-")} - named
 
 
 def test_exists_probe(spark, tmp_path):
@@ -98,7 +111,7 @@ def test_compact_default_sizing(spark, tmp_path):
 
 
 def test_commit_keeps_previous_snapshot(spark, tmp_path):
-    # ADVICE r1: deferred vacuum — a lazily-held read() of version N
+    # deferred vacuum: a lazily-held read() of version N
     # must survive the commit of N+1 (deleted only at N+2).
     t = ManagedTable(spark, str(tmp_path / "t"), keys=["k"])
     t.overwrite(spark.createDataFrame([(1, "a")], "k int, v string"))
@@ -120,7 +133,51 @@ def test_time_travel_reads_previous_snapshot(spark, tmp_path):
     assert {r["v"] for r in t.read(version=vs[0]).collect()} == {"a"}
     assert {r["v"] for r in t.read().collect()} == {"A", "b"}
     with pytest.raises(ValueError, match="not retained"):
-        t.read(version="v-99999999-nope")
+        t.read(version=99)
+
+
+def test_table_dir_holds_only_the_log_and_two_snapshots(spark, tmp_path):
+    """The log is the only commit record: after N commits the table dir
+    holds ``_delta_log/`` and at most two snapshot dirs, nothing else."""
+    t = ManagedTable(spark, str(tmp_path / "t"), keys=["k"])
+    t.overwrite(spark.createDataFrame([(0, "a")], "k int, v string"))
+    for i in range(1, 4):
+        t.merge(spark.createDataFrame([(i, "b")], "k int, v string"))
+    t.append(spark.createDataFrame([(9, "c")], "k int, v string"))
+    entries = set(os.listdir(t.path))
+    snapshots = {d for d in entries if d.startswith("v-")}
+    assert entries == {"_delta_log"} | snapshots and len(snapshots) == 2
+    assert {os.path.basename(t._snapshot_dir(v)) for v in t.versions()} == snapshots
+    assert t.versions() == [3, 4]
+
+
+def test_read_of_vacuumed_version_lists_retained_versions(spark, tmp_path):
+    t = ManagedTable(spark, str(tmp_path / "t"), keys=["k"])
+    t.overwrite(spark.createDataFrame([(1, "a")], "k int, v string"))
+    t.merge(spark.createDataFrame([(2, "b")], "k int, v string"))
+    t.merge(spark.createDataFrame([(3, "c")], "k int, v string"))
+    with pytest.raises(ValueError, match=r"version 0 not retained; available: \[1, 2\]"):
+        t.read(0)
+    assert {r["k"] for r in t.read(1).collect()} == {1, 2}
+
+
+def test_empty_partitioned_writes_read_back_empty(spark, tmp_path):
+    """Readers take the snapshot dir from the commitInfo, not from the
+    adds: an empty partitioned write leaves no data file at all, yet it
+    publishes and reads back empty with the table schema, and so do an
+    empty append and an empty merge on top of it."""
+    t = ManagedTable(spark, str(tmp_path / "t"), keys=["k"])
+    empty = spark.createDataFrame([], "k int, v string, p string")
+    want = "struct<k:int,v:string,p:string>"
+    c = t.overwrite(empty, partition_by=["p"])
+    assert c.metrics["numFiles"] == 0 and t.delta_log_state()[1] == {}
+    assert t.read().count() == 0 and t.read().schema.simpleString() == want
+    a = t.append(empty, partition_by=["p"])
+    assert (a.version, a.metrics["numFiles"]) == (1, 0)
+    m = t.merge(empty)
+    assert (m.version, m.metrics["numTargetRowsInserted"]) == (2, 0)
+    assert t.read().count() == 0 and t.read().schema.simpleString() == want
+    assert [h["operation"] for h in t.history()] == ["MERGE", "APPEND", "WRITE"]
 
 
 # ------------------------------------------------- observed-gate publish
@@ -156,7 +213,7 @@ def test_merge_gated_aborts_before_head_swap(spark, tmp_path):
     # table unchanged, staged snapshot cleaned up
     assert {r["k"] for r in t.read().collect()} == {1}
     assert t.versions() == before
-    assert not [d for d in os.listdir(t.path) if d.startswith(".staged")]
+    assert not _unnamed_dirs(t)
 
 
 def test_merge_gated_rejects_unique_check_spec(spark, tmp_path):
@@ -257,12 +314,12 @@ def test_merge_commit_metrics_upsert_and_tombstone(spark, tmp_path):
 def test_nonunique_merge_leaves_head_and_versions(spark, tmp_path):
     t = ManagedTable(spark, str(tmp_path / "u"), keys=["k"])
     t.overwrite(spark.createDataFrame([(1, "a")], "k int, v string"))
-    head, before, hist = t._head_dir(), t.versions(), t.history()
+    head, before, hist = _head(t), t.versions(), t.history()
     with pytest.raises(ValueError, match="not unique"):
         t.merge(spark.createDataFrame([(2, "b"), (2, "c")], "k int, v string"))
-    assert t._head_dir() == head and t.versions() == before
+    assert _head(t) == head and t.versions() == before
     assert t.history() == hist
-    assert not [d for d in os.listdir(t.path) if d.startswith(".staged")]
+    assert not _unnamed_dirs(t)
 
 
 def test_retried_merge_observes_each_attempt_afresh(spark, tmp_path):
@@ -273,15 +330,15 @@ def test_retried_merge_observes_each_attempt_afresh(spark, tmp_path):
     t = ManagedTable(spark, path, keys=["k"])
     t.overwrite(spark.createDataFrame([Row(k="base", v=0)]))
     other = ManagedTable(spark, path, keys=["k"])
-    real_publish, staged = t._try_publish, []
+    real_commit, staged = t._try_commit, []
 
-    def publish_after_an_intruder(stage_dir, seq, *args):
+    def commit_after_an_intruder(version, stage_dir, *args):
         staged.append(stage_dir)
         if len(staged) == 1:  # a concurrent commit lands first
             other.merge(spark.createDataFrame([Row(k="intruder", v=9)]))
-        return real_publish(stage_dir, seq, *args)
+        return real_commit(version, stage_dir, *args)
 
-    t._try_publish = publish_after_an_intruder
+    t._try_commit = commit_after_an_intruder
     c = t.merge(
         spark.createDataFrame([Row(k="mine", v=1), Row(k="base", v=2)]),
         checks=[{"name": "v_not_null", "type": "not_null", "columns": ["v"]}],
@@ -303,7 +360,7 @@ def _same_schema_as_inference(spark, t, count_jobs):
     schema, jobs = count_jobs(lambda: t.read().schema)
     # every footer of the snapshot: after an evolving append its files
     # carry different schemas, and plain inference reads just one
-    scanned = spark.read.option("mergeSchema", "true").parquet(t._head_dir())
+    scanned = spark.read.option("mergeSchema", "true").parquet(_head(t))
     assert schema == scanned.schema
     assert jobs == 0  # recorded at write time, not inferred
 
@@ -348,16 +405,6 @@ def test_read_schema_after_evolution(spark, tmp_path, count_jobs):
     )
     assert m.read().columns == ["k", "v", "score"]
     _same_schema_as_inference(spark, m, count_jobs)
-
-
-def test_snapshot_without_recorded_schema_reads_by_inference(spark, tmp_path):
-    t = ManagedTable(spark, str(tmp_path / "old"), keys=["k"])
-    t.overwrite(spark.createDataFrame([(1, "a"), (2, "b")], "k int, v string"))
-    want = t.read().schema
-    os.remove(os.path.join(t._head_dir(), "_schema.json"))  # pre-change layout
-    assert t.read().schema == want
-    t.merge(spark.createDataFrame([(2, "B")], "k int, v string"))
-    assert {r["k"]: r["v"] for r in t.read().collect()} == {1: "a", 2: "B"}
 
 
 def test_morton_interleave_known_bits(spark):
@@ -472,34 +519,43 @@ def test_zorder_value_handles_nulls_negatives_and_constants(spark):
 def test_backend_is_recorded(capsys):
     """CI output records which commit protocol the suite exercised:
     real Delta when delta-spark is installed (pyproject extra
-    ``delta``), the head-pointer-parquet emulation otherwise. Every
+    ``delta``), the delta-log-parquet emulation otherwise. Every
     ManagedTable code path branches on session.HAVE_DELTA, so the
     SAME suite covers both backends — this pins which one ran."""
     from ecom_churn_lakehouse_spark.session import HAVE_DELTA
     from ecom_churn_lakehouse_spark.sources.managed_table import ManagedTable
 
     assert ManagedTable.BACKEND == (
-        "delta" if HAVE_DELTA else "head-pointer-parquet"
+        "delta" if HAVE_DELTA else "delta-log-parquet"
     )
     print(f"\nmanaged-table backend under test: {ManagedTable.BACKEND}")
 
 
-# ----------------------- multi-writer optimistic concurrency (r7 dir. #4)
+# --------------------------------- multi-writer optimistic concurrency
 
 
 def test_cas_claim_is_exclusive(spark, tmp_path):
-    """The put-if-absent commit file is the CAS: a second claim on the
-    same sequence number must fail without touching anything."""
+    """Claiming a version hard-links the whole action file to
+    ``_delta_log/{v:020d}.json``: a second claim of the same version
+    fails and leaves the winner's file as it was."""
     t = ManagedTable(spark, str(tmp_path / "t"), keys=["k"])
-    t.overwrite(spark.createDataFrame([Row(k="a", v=1)]))
-    seq = t._commit_seq()
+    t.overwrite(spark.createDataFrame([Row(k="a", v=1)]))  # v0
     s1 = t._stage(spark.createDataFrame([Row(k="a", v=2)]), None)
     s2 = t._stage(spark.createDataFrame([Row(k="a", v=3)]), None)
-    assert t._try_publish(s1, seq + 1) is True
-    assert t._try_publish(s2, seq + 1) is False  # conflict detected
-    t._abandon_staged(s2)
+    info = {"operation": "WRITE", "operationParameters": {}, "operationMetrics": {}}
+    ldir = os.path.join(t.path, "_delta_log")
+    assert t._try_commit(1, s1, None, info) is True
+    with open(os.path.join(ldir, f"{1:020d}.json")) as f:
+        claimed = f.read()
+    assert t._try_commit(1, s2, None, info) is False  # conflict detected
+    with open(os.path.join(ldir, f"{1:020d}.json")) as f:
+        assert f.read() == claimed
+    info1 = json.loads(claimed.splitlines()[0])["commitInfo"]
+    assert info1["snapshotDir"] == os.path.basename(s1)
+    assert not [fn for fn in os.listdir(ldir) if fn.endswith(".tmp")]
+    shutil.rmtree(s2)
     assert {r["v"] for r in t.read().collect()} == {2}
-    assert t._commit_seq() == seq + 1
+    assert t.versions() == [0, 1]
 
 
 def test_concurrent_merges_serializable_no_lost_update(spark, tmp_path):
@@ -543,8 +599,8 @@ def test_concurrent_merges_serializable_no_lost_update(spark, tmp_path):
     # overlap keys: one writer owns both (serializable order, not a mix)
     assert rows[3]["who"] == rows[4]["who"]
     assert rows[3]["who"] in {"w1", "w2"}
-    # the log recorded three distinct committed sequences
-    assert t._commit_seq() == 2
+    # the log recorded three distinct committed versions
+    assert [h["version"] for h in t.history()] == [2, 1, 0]
 
 
 def test_append_racing_append_keeps_both(spark, tmp_path):
@@ -578,80 +634,92 @@ def test_append_racing_append_keeps_both(spark, tmp_path):
     assert ks == [-1, 0, 1, 2, 100, 101, 102]
 
 
-# ------------------------------------------ r8 ADVICE OCC hardening
-
-
-def test_abandoned_empty_claim_does_not_block_table(spark, tmp_path):
-    """r8 ADVICE #2: a pre-fix writer that crashed between creating its
-    commit file and writing the version name left an EMPTY claim at the
-    top sequence. Readers must fall back to the highest RESOLVABLE
-    commit instead of spinning-and-raising forever, and new writers
-    must keep committing (claiming past the dangling seq)."""
-    t = ManagedTable(spark, str(tmp_path / "t"), keys=["k"])
-    t.overwrite(spark.createDataFrame([Row(k="a", v=1)]))
-    seq = t._commit_seq()
-    # simulate the crashed pre-fix writer: empty claim at seq+1
-    crash = os.path.join(str(tmp_path / "t"), "_commits", f"{seq + 1:08d}.commit")
-    open(crash, "w").close()
-    assert {r["v"] for r in t._read_committed().collect()} == {1}
-    t.merge(spark.createDataFrame([Row(k="a", v=2)]))  # claims seq+2
-    assert {r["v"] for r in t.read().collect()} == {2}
-    assert t._commit_seq() == seq + 2
+# ------------------------------------------------ claims and vacuum
 
 
 def test_claim_file_is_never_observed_empty(spark, tmp_path):
-    """The commit claim is an os.link of a fully-written temp file —
-    content is in place atomically with the claim itself."""
+    """The claim is an os.link of a fully written temp file: a poller
+    reading the log while commits land never sees a missing, empty or
+    partial action file."""
+    import threading
+    import time
+
     t = ManagedTable(spark, str(tmp_path / "t"), keys=["k"])
     t.overwrite(spark.createDataFrame([Row(k="a", v=1)]))
-    t.merge(spark.createDataFrame([Row(k="a", v=2)]))
-    cdir = os.path.join(str(tmp_path / "t"), "_commits")
-    for fn in os.listdir(cdir):
-        with open(os.path.join(cdir, fn)) as f:
-            name = f.read().strip()
-        assert name.startswith("v-"), (fn, name)
+    ldir = os.path.join(t.path, "_delta_log")
+    seen, bad, done = set(), [], threading.Event()
+
+    def poll():
+        while True:
+            last_pass = done.is_set()  # one full pass after the last commit
+            for fn in os.listdir(ldir):
+                if not fn.endswith(".json"):
+                    continue
+                with open(os.path.join(ldir, fn)) as f:
+                    text = f.read()
+                try:
+                    actions = [json.loads(line) for line in text.splitlines()]
+                    whole = (
+                        text.endswith("\n")
+                        and "commitInfo" in actions[0]
+                        and "add" in actions[-1]
+                    )
+                except (ValueError, IndexError):
+                    whole = False
+                if not whole:
+                    bad.append((fn, text))
+                seen.add(fn)
+            if last_pass:
+                return
+            time.sleep(0.002)
+
+    poller = threading.Thread(target=poll)
+    poller.start()
+    try:
+        for v in range(2, 5):
+            t.merge(spark.createDataFrame([Row(k="a", v=v)]))
+    finally:
+        done.set()
+        poller.join(30)
+    assert not poller.is_alive()
+    assert not bad, bad
+    assert seen == {f"{v:020d}.json" for v in range(4)}
 
 
-def test_delayed_head_swap_cannot_regress_or_destroy(spark, tmp_path):
-    """r8 ADVICE #3: a delayed winner of seq N whose _swap_head runs
-    AFTER seq N+1 committed must neither regress HEAD to N nor rmtree
-    N+1's committed snapshot (keep set and swap order both derive from
-    the commit log, not from HEAD)."""
+def test_delayed_vacuum_keeps_newer_snapshots(spark, tmp_path):
+    """The vacuum of commit N deletes only the dir commit N-2 names, so
+    one that runs late — after N+1 committed — keeps the dirs of N and
+    N+1."""
     t = ManagedTable(spark, str(tmp_path / "t"), keys=["k"])
-    t.overwrite(spark.createDataFrame([Row(k="a", v=1)]))  # seq 0
-    t.merge(spark.createDataFrame([Row(k="a", v=2)]))      # seq 1
-    old_version = None
-    cdir = os.path.join(str(tmp_path / "t"), "_commits")
-    with open(os.path.join(cdir, "00000000.commit")) as f:
-        old_version = f.read().strip()
-    newest = os.path.basename(t._head_dir())
-    # replay the delayed swap of the OLD commit
-    t._swap_head(old_version)
-    assert os.path.basename(t._head_dir()) == newest  # no regression
-    assert os.path.isdir(os.path.join(str(tmp_path / "t"), newest))
-    assert {r["v"] for r in t.read().collect()} == {2}
+    t.overwrite(spark.createDataFrame([Row(k="a", v=1)]))  # v0
+    for v in (2, 3, 4):                                      # v1..v3
+        t.merge(spark.createDataFrame([Row(k="a", v=v)]))
+    t._vacuum(2)  # commit 2's vacuum, replayed after commit 3
+    assert t.versions() == [2, 3]
+    assert {r["v"] for r in t.read(2).collect()} == {3}
+    assert {r["v"] for r in t.read().collect()} == {4}
 
 
 def test_merge_gated_reads_seq_before_snapshot(spark, tmp_path):
-    """r8 ADVICE #1: a gated merge must capture base_seq BEFORE resolving
-    its base snapshot. A commit interleaved inside the snapshot read
-    then forces a CAS conflict + retry, so both merges survive."""
+    """A gated merge resolves its base version and the dir it names
+    once per attempt, and claims base + 1. A commit that lands right
+    after that resolution makes the claim fail and the retry restage on
+    the winner, so both merges survive."""
     path = str(tmp_path / "t")
     t = ManagedTable(spark, path, keys=["k"])
     t.overwrite(spark.createDataFrame([Row(k="base", v=0)]))
     other = ManagedTable(spark, path, keys=["k"])
     fired = {"done": False}
-    real_read = t._read_committed
+    real_dir = t._snapshot_dir
 
-    def read_with_interleaved_commit():
-        base = real_read()
-        base.count()  # materialize BEFORE the interleaved commit lands
+    def dir_with_interleaved_commit(version):
+        base = real_dir(version)
         if not fired["done"]:
             fired["done"] = True
             other.merge(spark.createDataFrame([Row(k="intruder", v=9)]))
-        return real_read()
+        return base
 
-    t._read_committed = read_with_interleaved_commit
+    t._snapshot_dir = dir_with_interleaved_commit
     checks = [{"name": "v_not_null", "type": "not_null",
                "columns": ["v"], "severity": "critical"}]
     report = t.merge(
@@ -663,13 +731,13 @@ def test_merge_gated_reads_seq_before_snapshot(spark, tmp_path):
     assert out == {"base": 0, "intruder": 9, "mine": 1}
 
 
-# ------------------------------------------ r8 directive #6: delta log
+# ------------------------------------------------------- the delta log
 
 
 def test_delta_log_mirrors_every_commit(spark, tmp_path):
-    """Directive #6 golden: each commit writes a Delta-protocol action
-    file; replaying protocol/metaData/add/remove reconstructs exactly
-    the live snapshot (paths, schema, partition columns)."""
+    """Each commit is a Delta-protocol action file; replaying
+    protocol/metaData/add/remove reconstructs exactly the live snapshot
+    (paths, schema, partition columns)."""
     import pyspark.sql.types as T
 
     path = str(tmp_path / "t")
@@ -732,27 +800,28 @@ def test_delta_log_replay_matches_time_travel(spark, tmp_path):
     t.overwrite(spark.createDataFrame([Row(k="a", v=1)]))
     t.merge(spark.createDataFrame([Row(k="a", v=2)]))
     _, active_v0 = t.delta_log_state(0)
-    prev_version = [v for v in t.versions()
-                    if v != os.path.basename(t._head_dir())]
-    assert len(prev_version) == 1
+    assert t.versions() == [0, 1]
     old = {r["v"] for r in spark.read.parquet(
         *[os.path.join(path, p) for p in active_v0]).collect()}
     assert old == {1}
-    assert {r["v"] for r in t.read(prev_version[0]).collect()} == {1}
+    assert {r["v"] for r in t.read(0).collect()} == {1}
+    live = {os.path.relpath(f.replace("file:", ""), path)
+            for f in t.read(0).inputFiles()}
+    assert live == set(active_v0)
 
 
-def test_read_via_delta_log_matches_read(spark, tmp_path):
-    """The delta-log mirror is load-bearing: resolving the active file
-    set by log replay and scanning exactly those files reproduces the
-    table, including after MERGE rewrites."""
+def test_read_resolves_through_delta_log(spark, tmp_path):
+    """The log is the only commit record: read() scans the snapshot dir
+    the newest commitInfo names and read(v) the one commit v names,
+    including after MERGE rewrites."""
     t = ManagedTable(spark, str(tmp_path / "t"), keys=["k"])
     t.overwrite(spark.createDataFrame([Row(k="a", v=1), Row(k="b", v=2)]))
     t.merge(spark.createDataFrame([Row(k="a", v=10), Row(k="c", v=3)]))
-    via_log = {r["k"]: r["v"] for r in t.read_via_delta_log().collect()}
-    via_head = {r["k"]: r["v"] for r in t.read().collect()}
-    assert via_log == via_head == {"a": 10, "b": 2, "c": 3}
-    # log-replay time travel to version 0
-    v0 = {r["k"]: r["v"] for r in t.read_via_delta_log(0).collect()}
+    newest = {r["k"]: r["v"] for r in t.read().collect()}
+    assert newest == {r["k"]: r["v"] for r in t.read(1).collect()}
+    assert newest == {"a": 10, "b": 2, "c": 3}
+    # time travel to log version 0
+    v0 = {r["k"]: r["v"] for r in t.read(0).collect()}
     assert v0 == {"a": 1, "b": 2}
 
 
@@ -801,7 +870,7 @@ def test_checkpoint_replay_survives_pruned_json_log(spark, tmp_path):
     ldir = os.path.join(path, "_delta_log")
     for v in (0, 1, 2):
         os.remove(os.path.join(ldir, f"{v:020d}.json"))
-    got = {r["k"]: r["v"] for r in t.read_via_delta_log().collect()}
+    got = {r["k"]: r["v"] for r in t.read().collect()}
     assert got == {"a": 10, "b": 2, "c": 3, "d": 4}
     meta, active = t.delta_log_state()
     assert meta is not None and active
@@ -825,7 +894,7 @@ def test_checkpoint_time_travel_consistency(spark, tmp_path):
     ).delta_log_state(1)
     assert active1 == active1_js and meta1 == meta1_js
     # target at a RETAINED version reads through the checkpoint path
-    got2 = {r["k"]: r["v"] for r in t.read_via_delta_log(2).collect()}
+    got2 = {r["k"]: r["v"] for r in t.read(2).collect()}
     assert got2 == {"a": 9, "b": 2}
     # target AT the checkpoint: both paths must agree exactly
     meta_ck, active_ck, _ = t._read_checkpoint(2)
@@ -838,7 +907,7 @@ def test_checkpoint_time_travel_consistency(spark, tmp_path):
 
 
 def test_checkpoint_schema_has_full_delta_action_columns(spark, tmp_path):
-    """r9 ADVICE #1: strict Delta clients (delta-rs / delta-spark)
+    """Strict Delta clients (delta-rs / delta-spark)
     reconstruct metaData from the checkpoint and expect the protocol's
     full column set — remove/txn action columns present (all-null in a
     snapshot checkpoint) and metaData carrying format / configuration /
@@ -876,7 +945,7 @@ def test_checkpoint_schema_has_full_delta_action_columns(spark, tmp_path):
 def test_interval_zero_reader_is_genuinely_checkpoint_free(
     spark, tmp_path
 ):
-    """r9 ADVICE #2: checkpoint_interval<=0 must disable checkpoint
+    """checkpoint_interval<=0 must disable checkpoint
     READING too, so a raw-JSON control replay never compares a
     checkpoint to itself. Proof: corrupt the checkpoint file on disk —
     the interval=0 reader still reconstructs the exact state (it never
@@ -894,7 +963,7 @@ def test_interval_zero_reader_is_genuinely_checkpoint_free(
     meta, active = raw.delta_log_state(2)
     assert meta is not None and len(active) >= 1
     got = {
-        r["k"]: r["v"] for r in raw.read_via_delta_log(2).collect()
+        r["k"]: r["v"] for r in raw.read(2).collect()
     }
     assert got == {"a": 9, "b": 2}
     # the checkpoint-consulting path, by contrast, does open the file
@@ -908,10 +977,10 @@ def test_interval_zero_reader_is_genuinely_checkpoint_free(
 def test_failed_checkpoint_write_does_not_abort_commit(
     spark, tmp_path, monkeypatch
 ):
-    """r9 ADVICE #3: the checkpoint is a read-path optimization — a
-    crash inside _write_checkpoint must not abort the publish (the
-    JSON commit is already durable); HEAD still advances and the data
-    is readable."""
+    """The checkpoint is a read-path optimization — a crash inside
+    _write_checkpoint must not abort the publish (the JSON commit is
+    already claimed); the table still advances and the data is
+    readable."""
     path = str(tmp_path / "t")
     t = ManagedTable(spark, path, keys=["k"], checkpoint_interval=1)
 
@@ -928,12 +997,16 @@ def test_failed_checkpoint_write_does_not_abort_commit(
     assert not any(
         fn.endswith(".checkpoint.parquet") for fn in os.listdir(ldir)
     )
-    got_log = {r["k"]: r["v"] for r in t.read_via_delta_log().collect()}
+    got_log = {r["k"]: r["v"] for r in t.read(1).collect()}
     assert got_log == got
+    _, active = t.delta_log_state()
+    live = {os.path.relpath(f.replace("file:", ""), path)
+            for f in t.read().inputFiles()}
+    assert set(active) == live
 
 
 def test_old_checkpoints_are_pruned_keep_last_two(spark, tmp_path):
-    """r9 ADVICE #4: _delta_log retains only the 2 newest checkpoint
+    """_delta_log retains only the 2 newest checkpoint
     parquets (older ones are superseded; raw JSON replay from zero
     still covers any earlier time-travel target)."""
     path = str(tmp_path / "t")
@@ -962,7 +1035,7 @@ def test_old_checkpoints_are_pruned_keep_last_two(spark, tmp_path):
 
 
 def test_checkpoint_roundtrips_external_name_description(spark, tmp_path):
-    """r10 ADVICE: _read_checkpoint must reconstruct metaData name /
+    """_read_checkpoint must reconstruct metaData name /
     description, not just id+schema — a checkpoint written FROM
     checkpoint-recovered state would otherwise null out fields an
     external writer (real delta-spark sets them via table properties)
@@ -1030,9 +1103,9 @@ def test_append_links_base_files_and_writes_only_new_rows(spark, tmp_path):
     )
     t.append(batch(0), partition_by=["d"])
     for i in range(1, 4):
-        base = t._head_dir()
+        base = _head(t)
         c = t.append(batch(i), partition_by=["d"])
-        head = t._head_dir()
+        head = _head(t)
         carried, new = _files(base), _files(head) - _files(base)
         assert carried <= _files(head)
         for rel in carried:
@@ -1058,18 +1131,18 @@ def test_append_evolves_partitioned_table_and_keeps_layout(spark, tmp_path):
         evolve_schema=True,
     )
     assert t.read().columns == ["k", "score", "p"]
-    scanned = spark.read.option("mergeSchema", "true").parquet(t._head_dir())
+    scanned = spark.read.option("mergeSchema", "true").parquet(_head(t))
     assert t.read().schema == scanned.schema
     assert {(r["k"], r["score"], r["p"]) for r in t.read().collect()} == {
         (1, None, "x"),
         (2, 2.5, "y"),
     }
-    head = t._head_dir()
+    head = _head(t)
     with pytest.raises(ValueError, match="evolve_schema"):
         t.append(spark.createDataFrame([(3, "z")], "k int, p string"), partition_by=["p"])
     with pytest.raises(ValueError, match="partition columns"):
         t.append(spark.createDataFrame([(3, 1.0, "z")], "k int, score double, p string"))
-    assert t._head_dir() == head
+    assert _head(t) == head
 
 
 def test_append_txn_ids_are_read_from_checkpoint_and_json_tail(spark, tmp_path):
@@ -1086,7 +1159,7 @@ def test_append_txn_ids_are_read_from_checkpoint_and_json_tail(spark, tmp_path):
     for v in (0, 1, 2):
         os.remove(os.path.join(ldir, f"{v:020d}.json"))
     assert set(t.transactions()) == {"fp-a", "fp-b", "fp-c"}
-    assert sorted(r["k"] for r in t.read_via_delta_log().collect()) == [0, 1, 2, 3]
+    assert sorted(r["k"] for r in t.read().collect()) == [0, 1, 2, 3]
 
 
 # ------------------------------------------------- merge(order_by=...)
@@ -1126,14 +1199,14 @@ def test_merge_order_by_gates_see_winners_only(spark, tmp_path):
     assert [(r.name, r.bad_rows) for r in c.report.results] == [("pk_unique", 0), ("v_not_null", 0)]
     assert c.metrics["numSourceRows"] == 4
     # a NULL winner fails its gate and publishes nothing
-    head, versions = t._head_dir(), t.versions()
+    head, versions = _head(t), t.versions()
     with pytest.raises(MergeBlocked, match="v_not_null") as blocked:
         t.merge(src, checks=checks, order_by=[F.col("ts").asc()])
     assert blocked.value.report.row_count == 2
     # without order_by a repeated key is refused, HEAD untouched
     with pytest.raises(MergeBlocked, match="not unique"):
         t.merge(src, checks=checks)
-    assert t._head_dir() == head and t.versions() == versions
+    assert _head(t) == head and t.versions() == versions
 
 
 def test_merge_order_by_with_delta_dedups_then_merges(spark, tmp_path, monkeypatch):

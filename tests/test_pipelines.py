@@ -224,7 +224,7 @@ def test_silver_gate_failure_quarantines_and_blocks(spark, tmp_path, monkeypatch
     bronze_ingest(spark, raw, bronze, str(tmp_path / "audit"), "r1")
     silver_publish(spark, bronze, silver, q, "r2")
     table = ManagedTable(spark, silver, keys=["order_id"])
-    head, versions = table._head_dir(), table.versions()
+    versions, history = table.versions(), table.history()
     monkeypatch.setattr(
         med,
         "_SILVER_DQ_CHECKS",
@@ -233,7 +233,7 @@ def test_silver_gate_failure_quarantines_and_blocks(spark, tmp_path, monkeypatch
     )
     with pytest.raises(DQGateFailure, match="no_ord_2"):
         med.silver_publish(spark, bronze, silver, q, "r3")
-    assert table._head_dir() == head and table.versions() == versions
+    assert table.versions() == versions and table.history() == history
     sample = spark.read.parquet(os.path.join(q, "no_ord_2")).collect()
     assert [r["order_id"] for r in sample] == ["ord-2"]
     assert os.path.isdir(os.path.join(q, "preclean_invalid"))
@@ -274,7 +274,9 @@ def test_bronze_partition_pruning(spark, tmp_path):
     assert "ingest_date" in scan, plan
 
     # 2. Behavioral proof: corrupt every OTHER partition's directory.
-    head = table._head_dir()
+    head = os.path.dirname(
+        os.path.dirname(table.read().inputFiles()[0].removeprefix("file:"))
+    )
     poisoned = 0
     for d in sorted(os.listdir(head)):
         if d.startswith("ingest_date=") and not d.endswith("2025-01-01"):

@@ -11,8 +11,10 @@ from __future__ import annotations
 
 import os
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+ROOT = Path(__file__).resolve().parent.parent
+sys.path.insert(0, str(ROOT))
 
 
 def main() -> None:
@@ -29,7 +31,7 @@ def main() -> None:
     spark = get_spark("dump-plan")
     spark.sparkContext.setLogLevel("ERROR")
     qs = registry.queries()
-    out_dir = os.path.join("/root/repo/plans", tag)
+    out_dir = os.path.join(ROOT, "plans", tag)
     os.makedirs(out_dir, exist_ok=True)
     for name in names:
         df = qs[name](spark, sf_dir)

@@ -35,8 +35,9 @@ from __future__ import annotations
 import sys
 import time
 from decimal import ROUND_FLOOR, ROUND_HALF_UP, Decimal
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parent.parent))
 
 import duckdb
 import numpy as np
